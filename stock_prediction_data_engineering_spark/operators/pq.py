@@ -48,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .similarity import cosine_expr
+from .similarity import cosine_expr, query_row
 
 
 def _fit_codebooks_matrix(X, m: int, nbits: int, seed: int, n_iter: int = 10):
@@ -263,7 +263,7 @@ shortlists through exactly that path)."""
 def _exact_rerank(
     shortlist_df: DataFrame,
     rerank_from: DataFrame,
-    query_vec: DataFrame,
+    qvec,
     k: int,
     vec_col: str,
     id_col: str,
@@ -274,7 +274,8 @@ def _exact_rerank(
     candidates with quantization distortion; re-scoring the short
     shortlist with TRUE distances recovers the exact ordering among
     them, so recall@k is limited only by shortlist membership, not by
-    code precision).
+    code precision). ``qvec`` is the query vector, which the caller
+    has already collected to the driver.
 
     Scale shape, small shortlists (``isin_pushdown=True``): the
     shortlist is O(k·factor) rows — bounded metadata, so collecting
@@ -302,7 +303,7 @@ def _exact_rerank(
     would override. Loses scan-level pruning (the shortlist is no
     longer 'a few row groups' anyway) but keeps the plan size and
     driver memory O(1) in shortlist length."""
-    qrow = query_vec.select(F.col(vec_col).alias("qvec")).limit(1)
+    qrow = query_row(rerank_from.sparkSession, qvec, rerank_from.schema[vec_col].dataType)
     cos = F.round(cosine_expr(F.col(vec_col), F.col("qvec")), 4)
     if isin_pushdown:
         ids = [r[0] for r in shortlist_df.select(id_col).collect()]
@@ -368,7 +369,7 @@ def pq_search(
     return _exact_rerank(
         adc_top,
         rerank_from,
-        query_vec,
+        qrow[0],
         k,
         vec_col,
         index.id_col,
@@ -582,7 +583,7 @@ def ivfpq_search(
     return _exact_rerank(
         adc_top,
         rerank_from,
-        query_vec,
+        qrow[0],
         k,
         vec_col,
         index.id_col,

@@ -19,6 +19,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def staged_append(df: DataFrame, path: str, partition_col: str) -> None:
@@ -195,6 +196,18 @@ def lsh_bucket(vec: Column, num_planes: int = 16) -> Column:
     for b in bits[1:]:
         bucket = bucket + b
     return bucket
+
+
+def query_row(spark: SparkSession, vec, dtype) -> DataFrame:
+    """One-row ``qvec`` frame holding a query vector already collected
+    to the driver, for a broadcast cross join.
+
+    Built from the vector instead of ``query_vec.limit(1)``: Spark names
+    each planned limit's row counter from a JVM-wide sequence
+    (``_limit_counter_<n>``), so a limit inside a compiled stage makes
+    every search a new generated class that the codegen cache never
+    reuses."""
+    return spark.createDataFrame([(list(vec),)], StructType([StructField("qvec", dtype)]))
 
 
 def brute_force_topk(
@@ -468,7 +481,8 @@ def ivf_search(
     """
     import numpy as np
 
-    q = np.array(query_vec.select(index.vec_col).first()[0], dtype=float)
+    qvec = query_vec.select(index.vec_col).first()[0]
+    q = np.array(qvec, dtype=float)
     qn = np.linalg.norm(q)
     if qn > 0:
         q = q / qn  # match the quantizer's unit-sphere space
@@ -487,8 +501,7 @@ def ivf_search(
             adc_score_expr,
         )
 
-        qrow = query_vec.select(index.vec_col).first()
-        lut_df = _lut_row(index.table.sparkSession, index.codebooks, qrow[0])
+        lut_df = _lut_row(index.table.sparkSession, index.codebooks, qvec)
         kk = int(np.asarray(index.codebooks).shape[1])
         adc_top = (
             # column-pruned: the ADC stage reads (id, cell, codes) only —
@@ -507,14 +520,15 @@ def ivf_search(
         return _exact_rerank(
             adc_top,
             index.table.select(index.id_col, index.vec_col),
-            query_vec.select(F.col(index.vec_col)),
+            qvec,
             k,
             index.vec_col,
             index.id_col,
             isin_pushdown=shortlist <= ISIN_PUSHDOWN_MAX,
         )
 
-    qdf = query_vec.select(F.col(index.vec_col).alias("qvec")).limit(1)
+    dtype = index.table.schema[index.vec_col].dataType
+    qdf = query_row(index.table.sparkSession, qvec, dtype)
     cos = F.round(cosine_expr(F.col(index.vec_col), F.col("qvec")), 4)
     return (
         cells.crossJoin(F.broadcast(qdf))
@@ -864,7 +878,9 @@ def lsh_search(
     when the probe reads code bytes: pass a wide probe set (e.g.
     ``probe_budget≈half the buckets``) together with ``shortlist``
     and total bytes stay ≈ (probed rows)·m + |shortlist|·dim·4."""
-    qrow = query_vec.select(F.col(index.vec_col).alias("qvec")).limit(1)
+    qvec = query_vec.select(index.vec_col).first()[0]
+    dtype = index.table.schema[index.vec_col].dataType
+    qrow = query_row(index.table.sparkSession, qvec, dtype)
     if probe_budget is not None:
         dots = lsh_plane_dots(query_vec, index.vec_col, index.num_planes)
         q_bucket = sum(1 << p for p, d in enumerate(dots) if d > 0)
@@ -891,8 +907,7 @@ def lsh_search(
             adc_score_expr,
         )
 
-        q = query_vec.select(index.vec_col).first()
-        lut_df = _lut_row(index.table.sparkSession, index.codebooks, q[0])
+        lut_df = _lut_row(index.table.sparkSession, index.codebooks, qvec)
         kk = int(np.asarray(index.codebooks).shape[1])
         adc_top = (
             probed.select(index.id_col, "codes")
@@ -909,7 +924,7 @@ def lsh_search(
         return _exact_rerank(
             adc_top,
             index.table.select(index.id_col, index.vec_col),
-            query_vec.select(F.col(index.vec_col)),
+            qvec,
             k,
             index.vec_col,
             index.id_col,

@@ -58,5 +58,8 @@ bench.main()
     side = json.loads(sidecar.read_text())
     assert set(side["runs"]) == {"q_scan_project", "q_multi_agg"}
     assert all(len(v) == 2 for v in side["runs"].values())
+    # Janino compile counts of the untimed run and both timed runs
+    assert set(side["compiles"]) == {"q_scan_project", "q_multi_agg"}
+    assert all(len(v) == 3 and min(v) >= 0 for v in side["compiles"].values())
     assert side["cpu_probe"]["start"]["t1_meps"] > 0
     assert side["cpu_probe"]["end"]["t32_meps"] > 0
