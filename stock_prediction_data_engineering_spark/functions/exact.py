@@ -30,13 +30,3 @@ def davg(col: str | Column) -> Column:
     """Order-independent AVG: exact decimal sum / count, one double div."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(DEC)).cast("double") / F.count(c)
-
-
-def sql_dsum(expr: str) -> str:
-    """DuckDB-side twin of :func:`dsum` (same alias discipline)."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,4))) AS DOUBLE)"
-
-
-def sql_davg(expr: str) -> str:
-    """DuckDB-side twin of :func:`davg`."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,4))) AS DOUBLE) / COUNT({expr})"

@@ -8,10 +8,9 @@ Scale posture (the whole point of these operators):
   band buckets or signature chunks — never by all-pairs comparison;
 - shingling/banding/joins/verification are JVM-side column
   expressions; the one Python touchpoint is the MinHash signature
-  kernel, an Arrow-batched numpy matrix op (64 interpreted
-  higher-order lambdas cost ~30 s of Janino codegen per plan-cache
-  miss and run no faster — see minhash_signature vs
-  minhash_signature_np);
+  kernel, an Arrow-batched numpy matrix op (the JVM form, 64
+  interpreted higher-order lambdas, cost ~30 s of Janino codegen per
+  plan-cache miss, ran no faster, and was removed);
 - verification (exact Jaccard / hamming / cosine) runs only on
   bucket-colliding pairs, which is the textbook MinHash-LSH design:
   band collisions have probability s^r for true similarity s, so
@@ -40,18 +39,7 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 # ---------------------------------------------------------------------------
-# Shingling + MinHash signatures (JVM-side)
-
-
-def char_shingles(text: Column | str, k: int = 5) -> Column:
-    """Distinct k-char shingles of a document as an array column."""
-    t = F.col(text) if isinstance(text, str) else text
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(t) - (k - 1), F.lit(1))),
-            lambda i: t.substr(i, F.lit(k)),
-        )
-    )
+# Shingling + MinHash signatures
 
 
 _MERSENNE = 2147483647  # 2^31 - 1: keeps a*h+b inside long range
@@ -105,6 +93,124 @@ def _sized(df: DataFrame, rows: int, budget: int, big: str = "merge") -> DataFra
     return F.broadcast(df) if rows <= budget else df.hint(big)
 
 
+# ---------------------------------------------------------------------------
+# Exact-duplicate collapse (shared by the dedup, similarity-join and
+# curation operators)
+
+
+def _dup_profile(members: DataFrame, key: str) -> tuple[int, int, bool]:
+    """Duplication profile of ``members`` over its content ``key``:
+    one 1-row ``count``/``countDistinct`` job, returned as
+    ``(n, d, collapse)``.
+
+    The exact-duplicate collapse runs an operator on ONE representative
+    per distinct content and maps the result back to every member.
+    Identical texts (or vectors) have identical shingle sets, gram
+    sets, signatures, buckets and scores, so nothing the full-corpus
+    pipeline would find is lost. Without it a cluster of m exact
+    copies inflates pair candidates by C(m, 2) while the data grows by
+    m: 24.5x time for 10x data (MinHash-LSH) and 10.8x (similarity
+    join) on the fully duplicated sf1 replication fixture, restored to
+    about linear by the collapse.
+
+    The collapse is adaptive, the same measure-then-plan move AQE
+    makes: it pays only when duplicate mass is material (at least 5%
+    of the rows repeat an earlier content), because its grouping and
+    member-expansion joins are pure overhead for a handful of twins.
+    A dup-free corpus therefore runs the direct pipeline and pays
+    only this profile job. ``collapse`` is that verdict; ``n`` and
+    ``d`` are the measured row and distinct counts the callers' join
+    gates (:func:`_sized`) read."""
+    prof = members.agg(
+        F.count("*").alias("n"), F.countDistinct(key).alias("d")
+    ).first()
+    return prof.n, prof.d, prof.d * 100 <= prof.n * 95
+
+
+def _expand_members(
+    rep_pairs: DataFrame,
+    reps: DataFrame,
+    members: DataFrame,
+    n: int,
+    d: int,
+    a: str,
+    b: str,
+    eligible: DataFrame | None,
+    intra: list[Column],
+) -> DataFrame:
+    """Expand a collapsed pair answer (see :func:`_dup_profile`) back
+    to member pairs.
+
+    ``rep_pairs`` holds representative pairs ``a`` < ``b`` plus value
+    columns every member pair inherits; ``reps`` is (__th, id), one
+    representative id per content hash; ``members`` is (id, __th), one
+    row per document; ``n``/``d`` are the measured member and distinct
+    counts.
+
+    - Cross pairs: each representative pair becomes every (member of
+      a's cluster, member of b's cluster) pair. Clusters are disjoint,
+      so least/greatest restores ``a`` < ``b`` and no cross pair can
+      collide with an intra pair. The expansion is output-bound:
+      exactly the rows the uncollapsed pipeline would have verified
+      one by one.
+    - Intra pairs: every member pair within the cluster of an
+      ``eligible`` representative (``id`` plus any columns the
+      ``intra`` value expressions read as ``x.<col>``), e.g. only
+      texts with a non-empty shingle set, whose twins the uncollapsed
+      pipeline pairs. ``eligible=None`` emits none (a threshold above
+      1 admits no identical pair).
+
+    Join strategies are gated on the measured counts: the (rid, __th)
+    side is d rows and ``members`` n rows, and both descend from
+    checkpoints or aggregates whose frozen estimates would
+    static-broadcast them at any scale; broadcast only where the
+    count fits the metadata budget."""
+    rep_th = reps.select(F.col("id").alias("rid"), "__th")
+
+    def side(df: DataFrame, rows: int, *renames: tuple[str, str]) -> DataFrame:
+        cols = [F.col(c).alias(to) for c, to in renames]
+        return _sized(df.select(*cols), rows, _BROADCAST_MAX_ROWS_META)
+
+    values = [c for c in rep_pairs.columns if c not in (a, b)]
+    cross = (
+        rep_pairs.join(side(rep_th, d, ("rid", a), ("__th", "__th_a")), a)
+        .join(side(rep_th, d, ("rid", b), ("__th", "__th_b")), b)
+        .join(side(members, n, ("__th", "__th_a"), ("id", "a_id")), "__th_a")
+        .join(side(members, n, ("__th", "__th_b"), ("id", "b_id")), "__th_b")
+        .select(
+            F.least("a_id", "b_id").alias(a),
+            F.greatest("a_id", "b_id").alias(b),
+            *values,
+        )
+    )
+    if eligible is None:
+        return cross
+    carried = [c for c in eligible.columns if c != "id"]
+    eligible_th = eligible.join(
+        _sized(rep_th, d, _BROADCAST_MAX_ROWS_META),
+        F.col("id") == F.col("rid"),
+        "inner",
+    ).select("__th", *carried)
+    # a semi join when no value column rides along: it keeps the
+    # planner's estimate of mm at members' own size, while an inner
+    # join's estimate multiplies both sides and turns the self-join
+    # below from a broadcast into a sort-merge join
+    mm = members.join(
+        _sized(eligible_th, d, _BROADCAST_MAX_ROWS_META),
+        "__th",
+        "inner" if carried else "left_semi",
+    )
+    intra_pairs = (
+        mm.alias("x")
+        .join(
+            mm.alias("y"),
+            (F.col("x.__th") == F.col("y.__th")) & (F.col("x.id") < F.col("y.id")),
+        )
+        .select(F.col("x.id").alias(a), F.col("y.id").alias(b), *intra)
+    )
+    return cross.unionByName(intra_pairs)
+
+
 def shingle_hashes(shingles: Column) -> Column:
     """Base hash per shingle, reduced mod 2^31-1. Each shingle STRING
     is hashed exactly once; the per-seed MinHash values are then cheap
@@ -126,8 +232,8 @@ def _mix_coeffs(seed: int) -> tuple[int, int]:
 
 def hashed_shingle_set(text: Column | str, k: int) -> Column:
     """Each document's DISTINCT hashed k-char shingles as an
-    ``array<int>`` — the fused form of
-    ``shingle_hashes(char_shingles(...))``.
+    ``array<int>`` — every k-char substring hashed as in
+    :func:`shingle_hashes`, fused into one pass.
 
     Distinct-HASH vs distinct-STRING sets: identical downstream
     everywhere (min-mix, intersect and set sizes are all set functions
@@ -157,35 +263,14 @@ def hashed_shingle_set(text: Column | str, k: int) -> Column:
     return F.array_distinct(grams)
 
 
-def _mixer(a: int, b: int):
-    # closure factory: a default-arg lambda would be seen by PySpark as
-    # a multi-argument higher-order lambda and silently receive the
-    # element index
-    return lambda h: F.pmod(a * h + b, F.lit(_MERSENNE))
-
-
-def minhash_signature(hashes: Column, num_hashes: int = 64) -> Column:
-    """num_hashes-wide MinHash signature over pre-hashed shingles
-    (see :func:`shingle_hashes`): for seed i, min over shingles of
-    (a_i * h + b_i) mod p — as one JVM array expression.
-
-    NOTE: higher-order lambdas are interpreted, not codegen'd; for the
-    hot path prefer :func:`minhash_signature_np` (Arrow-batched numpy,
-    measured ~5x faster at 64 hashes). This JVM form is kept for
-    environments without Arrow and as the semantic reference."""
-    return F.array(
-        *[
-            F.array_min(F.transform(hashes, _mixer(*_mix_coeffs(i))))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_signature_np(num_hashes: int = 64):
-    """Arrow-batched numpy MinHash kernel: a (num_hashes × n_shingles)
-    broadcasted multiply-mod-min per document. Bit-identical to
-    :func:`minhash_signature` (same (a_i, b_i) family, int64-exact:
-    a < 2^31 and h < 2^31 so a*h+b < 2^62). The per-doc Python loop is
+    """num_hashes-wide MinHash signature over pre-hashed shingles (see
+    :func:`shingle_hashes`): for seed i, min over shingles of
+    (a_i * h + b_i) mod p, with (a_i, b_i) from :func:`_mix_coeffs`.
+
+    Arrow-batched numpy kernel: a (num_hashes × n_shingles)
+    broadcasted multiply-mod-min per document, int64-exact (a < 2^31
+    and h < 2^31 so a*h+b < 2^62). The per-doc Python loop is
     amortized — each iteration is one C-level matrix op over the whole
     signature; Arrow moves only the long arrays."""
     from pyspark.sql.types import ArrayType, LongType
@@ -388,7 +473,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     jaccard_threshold: float = 0.7,
     output: str = "pairs",
-    verify_kernel: str = "auto",
 ) -> DataFrame:
     """Near-duplicate pairs by MinHash-LSH.
 
@@ -421,36 +505,18 @@ def minhash_lsh_pairs(
     (every member pair is reconstructible from it) in output
     cardinality independent of duplication.
 
-    Exact-duplicate collapse (the production-corpus prefilter,
-    engaged ADAPTIVELY — a 1-row duplication profile decides whether
-    the collapse pays for itself, so dup-free corpora run the direct
-    pipeline with zero expansion overhead): docs are grouped by
-    content hash, and the whole LSH pipeline runs
-    on ONE representative per distinct text. Identical texts have
-    identical shingle sets, signatures, and band hashes, so every
-    cross-text pair the full-corpus LSH would find is found through
-    the representatives and expanded back to the member ids; pairs
-    WITHIN an exact-dup cluster are Jaccard 1.0 by definition (emitted
-    without any verify work, and only for texts whose shingle set is
-    non-empty — two too-short-to-shingle twins score null, not 1.0,
-    exactly as the uncollapsed pipeline did). Real corpora carry
-    heavy exact-dup mass (and the sf1 replication fixture is 100%
-    duplicated); without the collapse, a cluster of m copies inflates
-    candidates by C(m,2) while data grows by m — measured 24.5x time
-    for 10x data at sf0.1->sf1, restored to ~linear by this prefilter.
+    Exact-duplicate collapse (see :func:`_dup_profile` and
+    :func:`_expand_members`): docs are grouped by content hash and the
+    whole LSH pipeline runs on ONE representative per distinct text;
+    pairs WITHIN an exact-dup cluster are Jaccard 1.0 by definition,
+    emitted without any verify work and only for texts whose shingle
+    set is non-empty (two too-short-to-shingle twins score null, not
+    1.0, exactly as the uncollapsed pipeline did).
     """
     if output not in ("pairs", "clusters"):
         raise ValueError(f"output must be 'pairs' or 'clusters', got {output!r}")
-    if verify_kernel not in ("auto", "arrow", "jvm"):
-        raise ValueError(
-            f"verify_kernel must be 'auto', 'arrow' or 'jvm', got {verify_kernel!r}"
-        )
     rows_per_band = num_hashes // bands
     n_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    # duplication profile: one 1-row aggregate over (id, content-hash)
-    # decides the plan — a corpus with no exact-dup mass skips the
-    # collapse machinery entirely (its expansion joins are pure
-    # overhead then), the same measure-then-plan move AQE makes.
     # members stays scan-partitioned: md5 over the raw text is cheap
     # relative to a full-corpus repartition, and every consumer is an
     # aggregate or a keyed join that shuffles anyway.
@@ -469,15 +535,7 @@ def minhash_lsh_pairs(
         # table the collapse branch materializes anyway (below).
         collapse = True
     else:
-        prof = members.agg(
-            F.count("*").alias("n"), F.countDistinct("__th").alias("d")
-        ).first()
-        # collapse pays only when duplicate mass is material: the
-        # expansion adds ~4 keyed joins, worth it when clusters shrink
-        # the candidate stage, pure overhead for a handful of twins
-        collapse = prof.d * 100 <= prof.n * 95
-        prof_d = prof.d
-        prof_n = prof.n
+        prof_n, prof_d, collapse = _dup_profile(members, "__th")
     if collapse:
         # Representative selection as ONE aggregate instead of
         # [groupBy + semi-join + full rescan]: within a __th group
@@ -522,23 +580,20 @@ def minhash_lsh_pairs(
         base_src = _spread(docs).select(
             F.col(id_col).alias("id"), F.col(text_col).alias("__t")
         )
-    if verify_kernel == "auto":
-        # The Arrow sort+searchsorted verify kernel wins per pair
-        # (~15 us vs ~110 us for JVM array_intersect's per-row hash-set
-        # build) but pays a flat Python-worker/Arrow round-trip that
-        # only amortizes when the candidate set is large. Candidate
-        # volume scales with DISTINCT text (the pipeline runs on one
-        # representative per distinct text), so the gate reads the
-        # distinct count — from the pairs path's duplication profile,
-        # or from the cluster path's rep-table count above. Measured
-        # crossover sits between d=4,992 (kernel loses ~1.3 s flat,
-        # driver bench sf0.1) and d=38,845 (kernel wins, sf1u); at
-        # d=377 k (sf10u) it wins 12+ s. Both branches are exact on
-        # the distinct hashed-shingle arrays — bit-identical answers
-        # (pinned by tests/test_dedup_similarity.py equivalence test).
-        use_arrow_verify = prof_d >= _VERIFY_KERNEL_MIN_DISTINCT
-    else:
-        use_arrow_verify = verify_kernel == "arrow"
+    # The Arrow sort+searchsorted verify kernel wins per pair
+    # (~15 us vs ~110 us for JVM array_intersect's per-row hash-set
+    # build) but pays a flat Python-worker/Arrow round-trip that
+    # only amortizes when the candidate set is large. Candidate
+    # volume scales with DISTINCT text (the pipeline runs on one
+    # representative per distinct text), so the gate reads the
+    # distinct count — from the pairs path's duplication profile,
+    # or from the cluster path's rep-table count above. Measured
+    # crossover sits between d=4,992 (kernel loses ~1.3 s flat,
+    # bench.py at sf0.1) and d=38,845 (kernel wins, sf1u); at
+    # d=377 k (sf10u) it wins 12+ s. Both branches are exact on
+    # the distinct hashed-shingle arrays — bit-identical answers
+    # (pinned by tests/test_dedup_similarity.py equivalence test).
+    use_arrow_verify = prof_d >= _VERIFY_KERNEL_MIN_DISTINCT
     # The hashed-shingle table feeds three consumers (signatures and
     # both verify sides); a lazy localCheckpoint computes the
     # shingling once per invocation instead of three times. See
@@ -855,98 +910,19 @@ def minhash_lsh_pairs(
         return cross_cl.unionByName(intra_cl)
     if not collapse:
         return rep_pairs
-
-    # Expand representative pairs back to member pairs. Clusters are
-    # disjoint (one content hash each), so least/greatest restores the
-    # id_a < id_b invariant and no cross pair can collide with an
-    # intra pair. The expansion is output-cardinality-bound — exactly
-    # the rows the uncollapsed pipeline would have verified one by one.
-    # strategy gates: rep_th is d rows, members n rows — both descend
-    # from checkpoints whose frozen estimates would static-broadcast
-    # them at any scale; broadcast only where the measured count fits
-    # the metadata byte budget
-    rep_th = reps.select(F.col("id").alias("rid"), "__th")
-    cross = (
-        rep_pairs.join(
-            _sized(
-                rep_th.select(
-                    F.col("rid").alias("id_a"), F.col("__th").alias("__th_a")
-                ),
-                prof_d,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "id_a",
-        )
-        .join(
-            _sized(
-                rep_th.select(
-                    F.col("rid").alias("id_b"), F.col("__th").alias("__th_b")
-                ),
-                prof_d,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "id_b",
-        )
-        .join(
-            _sized(
-                members.select(
-                    F.col("__th").alias("__th_a"), F.col("id").alias("a_id")
-                ),
-                prof_n,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "__th_a",
-        )
-        .join(
-            _sized(
-                members.select(
-                    F.col("__th").alias("__th_b"), F.col("id").alias("b_id")
-                ),
-                prof_n,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "__th_b",
-        )
-        .select(
-            F.least("a_id", "b_id").alias("id_a"),
-            F.greatest("a_id", "b_id").alias("id_b"),
-            "jaccard",
-        )
+    return _expand_members(
+        rep_pairs,
+        reps,
+        members,
+        prof_n,
+        prof_d,
+        "id_a",
+        "id_b",
+        None
+        if jaccard_threshold > 1.0
+        else base.filter(F.size("sh_hashes") > 0).select("id"),
+        [F.lit(1.0).alias("jaccard")],
     )
-    if jaccard_threshold > 1.0:
-        return cross
-    # intra-cluster pairs: identical non-empty shingle sets — Jaccard
-    # exactly 1.0 with no verify work (empty-shingle twins excluded:
-    # their Jaccard is null in the uncollapsed pipeline)
-    shingleable_th = (
-        base.filter(F.size("sh_hashes") > 0)
-        .select("id")
-        .join(
-            _sized(rep_th, prof_d, _BROADCAST_MAX_ROWS_META),
-            F.col("id") == F.col("rid"),
-            "inner",
-        )
-        .select("__th")
-    )
-    mm = members.join(
-        _sized(shingleable_th, prof_d, _BROADCAST_MAX_ROWS_META),
-        "__th",
-        "left_semi",
-    )
-    intra = (
-        mm.alias("x")
-        .join(
-            mm.alias("y"),
-            (F.col("x.__th") == F.col("y.__th"))
-            & (F.col("x.id") < F.col("y.id")),
-        )
-        .select(
-            F.col("x.id").alias("id_a"),
-            F.col("y.id").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(intra)
 
 
 # ---------------------------------------------------------------------------
@@ -1062,7 +1038,8 @@ def minhash_index_write(
 
     The signature tables are keyed by ``th = md5(text)`` — ONE row per
     DISTINCT text, however many exact copies the corpus carries. This
-    is the index-shaped form of the exact-dup collapse (R107): without
+    is the index-shaped form of the exact-dup collapse (see
+    :func:`_dup_profile`): without
     it, m copies of a text put m identical band rows in every bucket
     and a probe against them verifies m × (batch copies) identical
     candidate pairs — measured 23x time for 10x data on the sf10
@@ -1607,15 +1584,15 @@ def embedding_near_dup_pairs(
     candidates, exact cosine as verifier. See similarity.lsh_bucket
     for the signature construction.
 
-    Exact-duplicate collapse (adaptive, the embedding twin of the
-    text-side R107): identical vectors share a bucket, so m copies of
-    one vector inflate the bucket self-join by C(m,2) while data grows
-    by m — measured 39x time for 10x data on the sf10 replication
-    fixture. When a 1-row duplication profile shows material dup mass,
-    the bucket join runs on ONE representative per distinct vector
-    (grouped by the vector itself — exact float equality, no hash
-    collision risk) and pairs expand back through vector-keyed joins
-    whose cost is the output cardinality. Intra-cluster pairs compute
+    Exact-duplicate collapse (see :func:`_dup_profile`; without it m
+    copies of one vector measured 39x time for 10x data on the sf10
+    replication fixture): the bucket join runs on ONE representative
+    per distinct vector (grouped by the vector itself — exact float
+    equality, no hash collision risk) and pairs expand back through
+    vector-keyed joins whose cost is the output cardinality. That
+    expansion is this operator's own, not :func:`_expand_members`:
+    its rows carry whole float vectors, which the metadata-sized
+    broadcast gate does not fit. Intra-cluster pairs compute
     the SAME cosine_expr(v, v) as the direct path would, so the
     zero-vector NaN edge case filters identically.
 
@@ -1642,10 +1619,7 @@ def embedding_near_dup_pairs(
         # cluster output NEEDS the cluster structure; no profile to run
         collapse = True
     else:
-        prof = src.agg(
-            F.count("*").alias("n"), F.countDistinct("vec").alias("d")
-        ).first()
-        collapse = prof.d * 100 <= prof.n * 95
+        collapse = _dup_profile(src, "vec")[2]
     if collapse:
         reps = src.groupBy("vec").agg(F.min("id").alias("id"))
         base = reps.select("id", "vec").localCheckpoint(eager=False)

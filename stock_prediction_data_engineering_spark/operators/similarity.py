@@ -161,13 +161,6 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
-def _plane_component(plane: int, dim: int) -> Column:
-    """Deterministic pseudo-random hyperplane component in [-1, 1):
-    xxhash64 of (plane, dim) scaled — stable across sessions, no RNG."""
-    h = F.xxhash64(F.lit(plane), F.lit(dim))
-    return (h % 10007).cast("double") / 10007.0
-
-
 def lsh_bucket(vec: Column, num_planes: int = 16) -> Column:
     """Random-hyperplane LSH bucket id: bit i = sign(vec · plane_i).
 

@@ -31,7 +31,8 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .dedup import (
     _BROADCAST_MAX_ROWS_ARRAY,
-    _BROADCAST_MAX_ROWS_META,
+    _dup_profile,
+    _expand_members,
     _intersect_counts_np,
     _sized,
 )
@@ -128,32 +129,19 @@ def jaccard_similarity_join(
     # core — the same byte-based-sizing trap operators/dedup.py
     # documents. Measured at sf0.1: 18 s -> ~1 s for the gram scan.
     par = docs.sparkSession.sparkContext.defaultParallelism
-    # Exact-duplicate collapse (identity-preserving): identical texts
-    # have identical gram sets, so the whole prefix-filter pipeline
-    # runs on ONE representative per distinct text and the result
-    # expands back to member pairs — cross-cluster pairs inherit the
-    # representatives' exact (inter, union); intra-cluster pairs are
-    # inter = union = n with jac_bp = 10000 (only for clusters with a
-    # non-empty gram set: gram-less docs never enter the prefix index
-    # uncollapsed, so their twins must not pair here either). Without
-    # this, a cluster of m exact copies inflates candidates by C(m,2)
-    # while data grows by m — the measured 10.8x time for 10x data on
-    # the fully-duplicated sf1 replication fixture.
-    # The collapse engages ADAPTIVELY: one 1-row duplication profile
-    # over (id, content-hash); a dup-free corpus runs the direct
-    # pipeline and skips the expansion joins entirely.
+    # Exact-duplicate collapse (operators/dedup.py _dup_profile and
+    # _expand_members): the prefix-filter pipeline runs on ONE
+    # representative per distinct text; cross-cluster pairs inherit the
+    # representatives' exact (inter, union), intra-cluster pairs are
+    # inter = union = n with jac_bp = 10000, only for clusters with a
+    # non-empty gram set (gram-less docs never enter the prefix index
+    # uncollapsed, so their twins must not pair here either).
     src = docs.repartition(par, id_col)
     members = src.select(
         F.col(id_col).alias("id"),
         F.md5(F.col(text_col).cast("string")).alias("__th"),
     ).localCheckpoint(eager=False)
-    prof = members.agg(
-        F.count("*").alias("n"), F.countDistinct("__th").alias("d")
-    ).first()
-    # collapse pays only when duplicate mass is material: the
-    # expansion adds ~4 keyed joins, worth it when clusters shrink
-    # the candidate stage, pure overhead for a handful of twins
-    collapse = prof.d * 100 <= prof.n * 95
+    prof_n, prof_d, collapse = _dup_profile(members, "__th")
     if collapse:
         reps = members.groupBy("__th").agg(F.min("id").alias("id"))
         src = src.join(
@@ -197,7 +185,7 @@ def jaccard_similarity_join(
     dfreq = grams.groupBy("gram").agg(F.count("*").alias("df"))
 
     ranked = grams.join(
-        _sized(dfreq, prof.d, _SSJ_BROADCAST_MAX_D_VOCAB), "gram"
+        _sized(dfreq, prof_d, _SSJ_BROADCAST_MAX_D_VOCAB), "gram"
     ).withColumn(
         "rnk",
         F.row_number().over(
@@ -228,7 +216,7 @@ def jaccard_similarity_join(
     # prefix table scales with corpus grams, and the static planner
     # broadcast one full copy of it at 377 k docs off the checkpoint's
     # frozen estimate
-    pref = _sized(pref, prof.d, _SSJ_BROADCAST_MAX_D_VOCAB)
+    pref = _sized(pref, prof_d, _SSJ_BROADCAST_MAX_D_VOCAB)
     a = pref.alias("a")
     b = pref.alias("b")
     nsum = F.col("a.n") + F.col("b.n")
@@ -270,14 +258,14 @@ def jaccard_similarity_join(
         arrs.select(
             F.col("id").alias("id_a"), F.col("harr").alias("h_a"), F.col("n").alias("n_a")
         ),
-        prof.d,
+        prof_d,
         _BROADCAST_MAX_ROWS_ARRAY,
     )
     vb = _sized(
         arrs.select(
             F.col("id").alias("id_b"), F.col("harr").alias("h_b"), F.col("n").alias("n_b")
         ),
-        prof.d,
+        prof_d,
         _BROADCAST_MAX_ROWS_ARRAY,
     )
     paired = (
@@ -323,90 +311,20 @@ def jaccard_similarity_join(
     )
     if not collapse:
         return rep_pairs
-
-    # expand representative pairs to member pairs (disjoint clusters:
-    # least/greatest restores doc_a < doc_b; cross and intra sets
-    # cannot overlap)
-    # expansion-join strategy gated on the measured counts (rep_th is
-    # d rows, members n rows; both checkpoint/agg-descended)
-    rep_th = reps.select(F.col("id").alias("rid"), "__th")
-    cross = (
-        rep_pairs.join(
-            _sized(
-                rep_th.select(
-                    F.col("rid").alias("doc_a"), F.col("__th").alias("__th_a")
-                ),
-                prof.d,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "doc_a",
-        )
-        .join(
-            _sized(
-                rep_th.select(
-                    F.col("rid").alias("doc_b"), F.col("__th").alias("__th_b")
-                ),
-                prof.d,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "doc_b",
-        )
-        .join(
-            _sized(
-                members.select(
-                    F.col("__th").alias("__th_a"), F.col("id").alias("a_id")
-                ),
-                prof.n,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "__th_a",
-        )
-        .join(
-            _sized(
-                members.select(
-                    F.col("__th").alias("__th_b"), F.col("id").alias("b_id")
-                ),
-                prof.n,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "__th_b",
-        )
-        .select(
-            F.least("a_id", "b_id").alias("doc_a"),
-            F.greatest("a_id", "b_id").alias("doc_b"),
-            "inter_grams",
-            "union_grams",
-            "jac_bp",
-        )
-    )
-    if threshold_num > threshold_den:
-        return cross
-    grammed_th = (
-        arrs.filter(F.col("n") > 0)
-        .select("id", "n")
-        .join(
-            _sized(rep_th, prof.d, _BROADCAST_MAX_ROWS_META),
-            F.col("id") == F.col("rid"),
-            "inner",
-        )
-        .select("__th", "n")
-    )
-    mm = members.join(
-        _sized(grammed_th, prof.d, _BROADCAST_MAX_ROWS_META), "__th"
-    )
-    intra = (
-        mm.alias("x")
-        .join(
-            mm.alias("y"),
-            (F.col("x.__th") == F.col("y.__th"))
-            & (F.col("x.id") < F.col("y.id")),
-        )
-        .select(
-            F.col("x.id").alias("doc_a"),
-            F.col("y.id").alias("doc_b"),
+    return _expand_members(
+        rep_pairs,
+        reps,
+        members,
+        prof_n,
+        prof_d,
+        "doc_a",
+        "doc_b",
+        None
+        if threshold_num > threshold_den
+        else arrs.filter(F.col("n") > 0).select("id", "n"),
+        [
             F.col("x.n").cast("bigint").alias("inter_grams"),
             F.col("x.n").cast("bigint").alias("union_grams"),
             F.lit(10000).cast("bigint").alias("jac_bp"),
-        )
+        ],
     )
-    return cross.unionByName(intra)

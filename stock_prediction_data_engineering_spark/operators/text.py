@@ -21,14 +21,13 @@ def collapse_text_scores(
     text_col: str = "text",
 ) -> DataFrame:
     """Run a TEXT-PURE per-document scorer with the adaptive
-    exact-duplicate collapse (the operators/dedup.py R107 move,
+    exact-duplicate collapse (operators/dedup.py ``_dup_profile``,
     extended from dedup candidate generation to audit projections):
-    identical texts have identical scores, so when a 1-row duplication
-    profile shows material duplicate mass the scorer runs on ONE
-    representative per distinct text and the scores join back to every
-    member id by content hash — compute scales with DISTINCT text, not
-    corpus rows. A dup-free corpus runs the scorer directly with zero
-    added shuffle.
+    identical texts have identical scores, so when the profile engages
+    the collapse the scorer runs on ONE representative per distinct
+    text and the scores join back to every member id by content hash —
+    compute scales with DISTINCT text, not corpus rows. A dup-free
+    corpus runs the scorer directly with zero added shuffle.
 
     Contract: ``scorer(df[id_col, text_col]) -> df[id_col, *scores]``,
     one output row per input row, every score column a function of the
@@ -50,6 +49,8 @@ def collapse_text_scores(
     whose per-text compute dominates one md5-keyed text exchange —
     Arrow/pandas UDF featurizers, heavy regex stacks, per-text model
     scoring — where compute-per-distinct-text is the real budget."""
+    from .dedup import _dup_profile
+
     spark = docs.sparkSession
     par = spark.sparkContext.defaultParallelism
     hashed = (
@@ -66,12 +67,7 @@ def collapse_text_scores(
         )
         .localCheckpoint(eager=False)
     )
-    prof = hashed.agg(
-        F.count("*").alias("n"), F.countDistinct("__th").alias("d")
-    ).first()
-    # same engagement threshold as the ssjoin/dedup collapse: the
-    # join-back pays only when clusters materially shrink the compute
-    if prof.d * 100 > prof.n * 95:
+    if not _dup_profile(hashed, "__th")[2]:
         return scorer(docs.select(id_col, text_col))
     reps = hashed.groupBy("__th").agg(
         F.min(id_col).alias("__rep_id"),

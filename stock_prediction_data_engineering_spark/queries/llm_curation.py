@@ -169,29 +169,28 @@ def contamination_pairs(docs: DataFrame) -> DataFrame:
     sf0.1 (1.37 s vs 0.75 s) and sf1 (7.13 s vs 6.98 s) and caps out
     at spark.driver.maxResultSize long before 100 TB.
 
-    Exact-duplicate collapse (adaptive, same move as
-    operators/dedup.py R107): output cardinality is quadratic in
+    Exact-duplicate collapse (adaptive, operators/dedup.py
+    ``_dup_profile``): output cardinality is quadratic in
     exact-duplicate mass by the query's own semantics — the 10 copies
     of one text straddle the % 97 cut, so every (train-copy,
     bench-copy) pair is a real answer row. That output is irreducible,
-    but the GRAM JOIN need not pay it: when a 1-row duplication
-    profile shows material dup mass, grams are computed for ONE
+    but the GRAM JOIN need not pay it: when the profile engages the
+    collapse, grams are computed for ONE
     representative per distinct text, the overlap join runs at
     cluster level (directed pairs, self-pairs included — a cluster
     with members on both sides of the cut overlaps itself on its full
     gram set), and members are stamped back on by two content-hash
     joins whose cost is output-bound. Candidate work drops from
     O((m·D)²-ish) to O(D²-ish) for m-fold duplication."""
+    from ..operators.dedup import _dup_profile
+
     words = docs.select(
         F.col("doc_id"), F.split("text", " ").alias("words")
     )
     members = docs.select(
         "doc_id", F.md5(F.col("text").cast("string")).alias("__th")
     ).localCheckpoint(eager=False)
-    prof = members.agg(
-        F.count("*").alias("n"), F.countDistinct("__th").alias("d")
-    ).first()
-    if prof.d * 100 > prof.n * 95:  # dup mass immaterial: direct path
+    if not _dup_profile(members, "__th")[2]:  # dup mass immaterial: direct path
         grams = words.select(
             "doc_id",
             F.explode(F.array_distinct(F.expr(_TRIGRAMS))).alias("g"),
@@ -284,7 +283,7 @@ def contamination_screen(docs: DataFrame) -> DataFrame:
     :func:`contamination_pairs` (q_contamination_check) for forensics.
 
     Scale shape: grams are computed for ONE representative per distinct
-    text (the R107 collapse, unconditional here — the screen's whole
+    text (the exact-dup collapse, unconditional here — the screen's whole
     point is the duplicated regime, and on dup-free corpora reps ≡ docs
     so the collapse is a no-op groupBy); the overlap join and BOTH
     aggregations run at cluster grain; the bench side collapses to a
@@ -912,6 +911,7 @@ def boilerplate_profile(docs: DataFrame) -> DataFrame:
        partitions running ~2 threads). The same trap
        operators/dedup.py documents; row counts, not compressed
        bytes, are the honest sizing here."""
+    from ..operators.dedup import _dup_profile
     from ..operators.ssjoin import word_ngrams
 
     n_parts = int(
@@ -920,14 +920,11 @@ def boilerplate_profile(docs: DataFrame) -> DataFrame:
     members = docs.select(
         "doc_id", F.md5(F.col("text").cast("string")).alias("__th")
     ).localCheckpoint(eager=False)
-    prof = members.agg(
-        F.count("*").alias("n"), F.countDistinct("__th").alias("d")
-    ).first()
     boiler = F.sum(F.when(F.col("docs") >= 10, 1).otherwise(0))
     bp = F.expr(
         "sum(CASE WHEN docs >= 10 THEN 1 ELSE 0 END) * 10000 div count(*)"
     )
-    if prof.d * 100 > prof.n * 95:  # dup mass immaterial: direct path
+    if not _dup_profile(members, "__th")[2]:  # dup mass immaterial: direct path
         from ..operators.ssjoin import split_words, word_ngrams_over
 
         # barrier between split and the gram lambda: an inline split
@@ -1257,6 +1254,8 @@ def q_containment_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     side streams map-side through one token-keyed aggregate. Exact
     integers end-to-end (cross-multiplied threshold, bp via integer
     division)."""
+    from ..operators.dedup import _dup_profile
+
     # row-honest repartition before the CPU-heavy bigram explode: the
     # documents file is few input splits and byte-tiny relative to its
     # per-row compute, so without this the whole gram build runs on
@@ -1271,9 +1270,6 @@ def q_containment_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     members = src.select(
         "doc_id", F.md5(F.col("text").cast("string")).alias("__th")
     ).localCheckpoint(eager=False)
-    prof = members.agg(
-        F.count("*").alias("n"), F.countDistinct("__th").alias("d")
-    ).first()
     out_cols = lambda df: df.filter(  # noqa: E731
         F.col("n_shared") * 10 >= F.col("n_grams")
     ).select(
@@ -1285,7 +1281,7 @@ def q_containment_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("containment_bp"),
     )
-    if prof.d * 100 > prof.n * 95:  # dup mass immaterial: direct path
+    if not _dup_profile(members, "__th")[2]:  # dup mass immaterial: direct path
         grams = src.select(
             "doc_id", F.split("text", " ").alias("words")
         ).select(
@@ -1305,7 +1301,7 @@ def q_containment_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n_shared"))
         )
         return out_cols(inter.join(sizes, "doc_id"))
-    # exact-dup collapse (R107, the contamination_pairs move):
+    # exact-dup collapse (the contamination_pairs move):
     # containment is text-pure, so the gram join, the size table, AND
     # the threshold all evaluate at cluster level — only PASSING
     # cluster pairs expand to members, so candidate work is

@@ -33,12 +33,21 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.2)
     # union the per-doc signature summary so the query returns rows
-    # even when the corpus has no near-duplicate pair at all
-    sigs = docs.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("doc_id").alias("id_b"),
-        F.lit(1.0).alias("jaccard"),
-    ).limit(5)
+    # even when the corpus has no near-duplicate pair at all. The
+    # ordered limit plans as a TakeOrderedAndProject, which is not
+    # code-generated: a bare limit's generated code names its counter
+    # from a JVM-wide sequence, so each planning would compile new
+    # classes (2 per pass). The order also makes the filler rows
+    # deterministic.
+    sigs = (
+        docs.select(
+            F.col("doc_id").alias("id_a"),
+            F.col("doc_id").alias("id_b"),
+            F.lit(1.0).alias("jaccard"),
+        )
+        .orderBy("id_a")
+        .limit(5)
+    )
     return pairs.unionByName(sigs)
 
 

@@ -424,24 +424,26 @@ def leakage_profile(docs: DataFrame) -> DataFrame:
     corpus is a driver OOM.
 
     Exact-duplicate collapse (adaptive, ALGEBRAIC — stronger than the
-    pair-expansion in operators/dedup.py R107 because this query's
-    output is per-eval-doc aggregates, not pairs): the split is a
-    function of md5(text), so every member of an exact-dup cluster
-    shares one split label, and for an eval doc e in cluster E the
+    pair expansion of operators/dedup.py ``_expand_members`` because
+    this query's output is per-eval-doc aggregates, not pairs): the
+    split is a function of md5(text), so every member of an exact-dup
+    cluster shares one split label, and for an eval doc e in cluster E the
     answer is pure cluster-level algebra over train clusters T —
 
         n_train_docs(e)   = sum_T  m_T * [shared(T, E) > 0]
         n_shared_grams(e) = sum_T  m_T * shared(T, E)
 
     (m_T = cluster size, shared = gram overlap between the two
-    distinct texts). So when the 1-row duplication profile shows
-    material dup mass, the gram join runs once per distinct-text
-    pair, the two sums aggregate a cluster-sized table, and members
+    distinct texts). So when the profile (operators/dedup.py
+    ``_dup_profile``) engages the collapse, the gram join runs once
+    per distinct-text pair, the two sums aggregate a cluster-sized table, and members
     are stamped on by one content-hash join — the whole path is
     LINEAR in corpus size even though the direct pipeline's
     intermediate match set grows quadratically in duplication (the
     direct path's per-gram fan-out is m^2 per cluster; measured 5.5x
     time for 10x data on the fully-duplicated sf1 fixture)."""
+    from ..operators.dedup import _dup_profile
+
     bucket = F.substring(F.md5("text"), 1, 2)
     split = (
         F.when(bucket < "cc", "train").when(bucket < "e6", "val").otherwise("test")
@@ -451,10 +453,7 @@ def leakage_profile(docs: DataFrame) -> DataFrame:
         F.md5(F.col("text").cast("string")).alias("__th"),
         split.alias("split"),
     ).localCheckpoint(eager=False)
-    prof = members.agg(
-        F.count("*").alias("n"), F.countDistinct("__th").alias("d")
-    ).first()
-    if prof.d * 100 > prof.n * 95:  # dup mass immaterial: direct path
+    if not _dup_profile(members, "__th")[2]:  # dup mass immaterial: direct path
         grams = docs.select(
             "doc_id",
             split.alias("split"),

@@ -41,17 +41,17 @@ def test_minhash_lsh_finds_planted_near_dups(planted_docs):
     assert not any(3 in p or 5 in p for p in pairs)
 
 
-def test_minhash_verify_branches_bit_identical(spark):
+def test_minhash_verify_branches_bit_identical(spark, monkeypatch):
     """The adaptive verify gate (operators/dedup.py
     _VERIFY_KERNEL_MIN_DISTINCT) picks JVM array_intersect below the
     candidate-volume crossover and the Arrow sort+searchsorted kernel
     above it. Both branches must produce BIT-IDENTICAL answers — same
     pairs, same rounded jaccard — in both output forms, on a corpus
     with exact dups, near dups, unrelated docs, and a too-short text
-    (empty shingle set exercises the null/empty intersect edge)."""
-    from stock_prediction_data_engineering_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
+    (empty shingle set exercises the null/empty intersect edge). Each
+    branch is forced by moving the gate: 0 (every corpus takes the
+    Arrow kernel) or above the fixture's distinct-text count (JVM)."""
+    from stock_prediction_data_engineering_spark.operators import dedup
 
     base = (
         "the quick brown fox jumps over the lazy dog while the cat "
@@ -67,18 +67,80 @@ def test_minhash_verify_branches_bit_identical(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
+    gates = {"jvm": len(rows) + 1, "arrow": 0}
     for output in ("pairs", "clusters"):
         got = {}
-        for kern in ("jvm", "arrow"):
-            df = minhash_lsh_pairs(
-                docs,
-                jaccard_threshold=0.2,
-                output=output,
-                verify_kernel=kern,
+        for kern, gate in gates.items():
+            monkeypatch.setattr(dedup, "_VERIFY_KERNEL_MIN_DISTINCT", gate)
+            df = dedup.minhash_lsh_pairs(
+                docs, jaccard_threshold=0.2, output=output
             )
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert ("MapInPandas" in plan) == (kern == "arrow"), (kern, output)
             got[kern] = sorted(tuple(r) for r in df.collect())
         assert got["jvm"] == got["arrow"], f"branch mismatch for {output}"
         assert len(got["jvm"]) > 0  # the comparison is not vacuous
+
+
+def test_collapse_helpers_verdict_and_member_expansion(spark):
+    """The shared exact-duplicate collapse (operators/dedup.py
+    _dup_profile, _expand_members) on hand-built frames: the verdict
+    flips exactly at the 95% rule, and expanding representative pairs
+    over clusters of sizes 1, 2 and 4 gives the brute-force member-pair
+    set, with id_a < id_b and no repeated pair."""
+    from itertools import combinations
+
+    from pyspark.sql import functions as F
+
+    from stock_prediction_data_engineering_spark.operators.dedup import (
+        _dup_profile,
+        _expand_members,
+    )
+
+    def values(cols, rows):
+        # an inline VALUES table scans in the JVM; a createDataFrame
+        # list would start Python workers on every one of its scans
+        body = ", ".join(str(tuple(r)) for r in rows)
+        return spark.sql(f"SELECT * FROM VALUES {body} AS t({cols})")
+
+    def profile(n, d):
+        return _dup_profile(values("id, __th", [(i, f"h{i % d}") for i in range(n)]), "__th")
+
+    assert profile(20, 19) == (20, 19, True)
+    assert profile(21, 20) == (21, 20, False)
+
+    # member ids interleave across clusters, so each representative
+    # (min id) is neither the first listed nor the smallest overall
+    clusters = {"a": [7], "b": [12, 3], "c": [5, 1, 20, 9]}
+    members = values("id, __th", [(i, th) for th, ids in clusters.items() for i in ids])
+    rep = {th: min(ids) for th, ids in clusters.items()}
+    reps = values("__th, id", rep.items())
+    cross_spec = [("a", "b", 50), ("b", "c", 80)]
+    rep_pairs = values(
+        "id_a, id_b, jaccard",
+        [(min(rep[x], rep[y]), max(rep[x], rep[y]), v) for x, y, v in cross_spec],
+    )
+    # b is not eligible: its twins must not pair (like empty-shingle twins)
+    eligible = values("id, w", [(rep["a"], 100), (rep["c"], 100)])
+
+    rows = [
+        tuple(r)
+        for r in _expand_members(
+            rep_pairs, reps, members, 7, 3, "id_a", "id_b", eligible,
+            [F.col("x.w").alias("jaccard")],
+        ).collect()
+    ]
+    assert all(a < b for a, b, _ in rows)
+    assert len({(a, b) for a, b, _ in rows}) == len(rows)  # no repeats
+    cross = {
+        (min(p, q), max(p, q), v)
+        for x, y, v in cross_spec
+        for p in clusters[x]
+        for q in clusters[y]
+    }
+    intra = {(p, q, 100) for th in "ac" for p, q in combinations(sorted(clusters[th]), 2)}
+    assert len(cross) == 1 * 2 + 2 * 4 and len(intra) == 6
+    assert set(rows) == cross | intra
 
 
 def test_minhash_bucket_candidates_match_self_join(spark):

@@ -2,11 +2,20 @@
 queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
 Usage: python tools/gen_plans.py
+       python tools/gen_plans.py --queries q_a,q_b --out-dir DIR
+
+The second form writes one ``DIR/<query>.txt`` per query: the
+formatted physical plan (``explain("formatted")``) with the ids Spark
+draws from JVM-wide counters normalized — expression ids (``#123``),
+exchange plan ids and checkpoint RDD ids — so that dumps made from two
+checkouts compare with a plain ``diff -r``.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -128,13 +137,48 @@ PICKS = {
 }
 
 
+# ids Spark draws from JVM-wide counters: they differ between any two
+# runs of the same plan, so a dump replaces each with a fixed token
+_RUN_IDS = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+]
+
+
+def normalized_plan(spark, df) -> str:
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    for pat, token in _RUN_IDS:
+        plan = pat.sub(token, plan)
+    return plan
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--queries", help="comma-separated query names to dump")
+    ap.add_argument("--out-dir", help="directory for the --queries dumps")
+    args = ap.parse_args()
+    if bool(args.queries) != bool(args.out_dir):
+        ap.error("--queries and --out-dir go together")
+
     from stock_prediction_data_engineering_spark import registry
     from stock_prediction_data_engineering_spark.session import get_spark
 
     registry.load_all()
     spark = get_spark(app_name="plans")
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if args.queries:
+        os.makedirs(args.out_dir, exist_ok=True)
+        for name in args.queries.split(","):
+            plan = normalized_plan(spark, registry.QUERIES[name.strip()](spark, sf))
+            path = os.path.join(args.out_dir, f"{name.strip()}.txt")
+            with open(path, "w") as fh:
+                fh.write(plan)
+            print(f"wrote {path} ({len(plan.splitlines())} lines)")
+        spark.stop()
+        return
     out = [
         "# PLANS — physical plans of representative queries (sf0.1, local[32])",
         "",
