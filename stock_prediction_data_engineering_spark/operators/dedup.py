@@ -187,28 +187,25 @@ def _expand_members(
         return cross
     carried = [c for c in eligible.columns if c != "id"]
     eligible_th = eligible.join(
-        _sized(rep_th, d, _BROADCAST_MAX_ROWS_META),
-        F.col("id") == F.col("rid"),
-        "inner",
+        _sized(rep_th, d, _BROADCAST_MAX_ROWS_META), F.col("id") == F.col("rid")
     ).select("__th", *carried)
-    # a semi join when no value column rides along: it keeps the
-    # planner's estimate of mm at members' own size, while an inner
-    # join's estimate multiplies both sides and turns the self-join
-    # below from a broadcast into a sort-merge join
-    mm = members.join(
-        _sized(eligible_th, d, _BROADCAST_MAX_ROWS_META),
-        "__th",
-        "inner" if carried else "left_semi",
-    )
+    eligible_th = _sized(eligible_th, d, _BROADCAST_MAX_ROWS_META)
+    # a semi join keeps the planner's estimate of mm at members' own
+    # size (an inner join's estimate multiplies both sides and turns
+    # the self-join below from a broadcast into a sort-merge join);
+    # the value columns attach to the pairs after the self-join
+    mm = members.join(eligible_th, "__th", "left_semi")
     intra_pairs = (
-        mm.alias("x")
+        mm.alias("p")
         .join(
-            mm.alias("y"),
-            (F.col("x.__th") == F.col("y.__th")) & (F.col("x.id") < F.col("y.id")),
+            mm.alias("q"),
+            (F.col("p.__th") == F.col("q.__th")) & (F.col("p.id") < F.col("q.id")),
         )
-        .select(F.col("x.id").alias(a), F.col("y.id").alias(b), *intra)
+        .select(F.col("p.__th").alias("__th"), F.col("p.id").alias(a), F.col("q.id").alias(b))
     )
-    return cross.unionByName(intra_pairs)
+    if carried:
+        intra_pairs = intra_pairs.join(eligible_th.alias("x"), "__th")
+    return cross.unionByName(intra_pairs.select(a, b, *intra))
 
 
 def shingle_hashes(shingles: Column) -> Column:

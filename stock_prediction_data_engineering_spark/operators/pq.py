@@ -34,7 +34,7 @@ Shape of the implementation, Spark-first:
 
 Vectors are L2-normalized before both fit and encode, so the ADC
 inner product approximates cosine directly (same geometry trick as
-IVF's spherical k-means, operators/similarity.py:97).
+IVF's spherical k-means, operators/similarity.py ``fit_quantizer``).
 
 Reference scope: the reference repo (a 131-line pandas ingest DAG)
 has no vector search; this module is north-star surface per
@@ -48,78 +48,36 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .similarity import cosine_expr, query_row
+from .similarity import (
+    _sample_matrix,
+    cosine_expr,
+    fit_quantizer,
+    ivf_assign,
+    kmeans_fit,
+    query_row,
+    staged_append,
+)
 
 
 def _fit_codebooks_matrix(X, m: int, nbits: int, seed: int, n_iter: int = 10):
-    """Per-subspace Lloyd k-means over a driver-side sample matrix
-    ``X`` (n, dim). Returns ``(m, k, dim // m)`` with k clamped to the
-    sample size; empty clusters keep their previous center (standard
-    Lloyd fallback)."""
+    """Per-subspace codebooks over a driver-side sample matrix ``X``
+    (n, dim): one :func:`~.similarity.kmeans_fit` per subspace.
+    Returns ``(m, k, dim // m)`` with k = 2^nbits clamped to the sample
+    size."""
     import numpy as np
 
     n, dim = X.shape
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    k = min(1 << nbits, n)
-    rng = np.random.default_rng(seed)
-    Xs = X.reshape(n, m, dsub)
-    codebooks = np.empty((m, k, dsub), dtype=np.float64)
-    for sub in range(m):
-        data = Xs[:, sub, :]
-        centers = data[rng.choice(n, size=k, replace=False)].copy()
-        for _ in range(n_iter):
-            # ||x-c||² argmin via -2x·c + ||c||² (||x||² constant per row)
-            d2 = -2.0 * data @ centers.T + (centers**2).sum(axis=1)
-            assign = d2.argmin(axis=1)
-            # vectorized Lloyd update: per-dimension bincount replaces
-            # the k boolean-mask passes (256 masks × 16k rows × 10
-            # iters × 8 subspaces measured ~4 s; this is ~0.3 s)
-            counts = np.bincount(assign, minlength=k)
-            sums = np.stack(
-                [
-                    np.bincount(assign, weights=data[:, d], minlength=k)
-                    for d in range(dsub)
-                ],
-                axis=1,
-            )
-            nz = counts > 0
-            centers[nz] = sums[nz] / counts[nz, None]
-        codebooks[sub] = centers
-    return codebooks
-
-
-def _sample_matrix(
-    corpus: DataFrame, vec_col: str, sample_limit: int, extra_cols: tuple = ()
-):
-    """Deterministic bounded sample of (normalized vector, *extras):
-    the ``sample_limit`` rows with the smallest ``xxhash64(vector)`` —
-    stable across runs and executors, executed as per-partition top-k
-    (TakeOrderedAndProject), never a global sort. The collect is
-    bounded metadata (≤ sample_limit × dim floats, ~4 MB at the
-    defaults) — O(1) in corpus size.
-
-    The top-k orders by the hash of the RAW vector column and
-    normalizes the collected sample driver-side: hashing the
-    l2_normalize_expr output instead re-evaluates the normalize
-    lambda (an O(d²)-interpreted aggregate-in-lambda after
-    CollapseProject — the operators/winnow.py trap) on EVERY corpus
-    row inside the TakeOrdered scan; measured 10.7 s vs ~1 s for a
-    20k-row corpus at sf1, and it grows with the corpus while the
-    numpy normalize stays O(sample)."""
-    import numpy as np
-
-    rows = (
-        corpus.select(F.col(vec_col).alias("v"), *extra_cols)
-        .orderBy(F.xxhash64(F.col("v")))
-        .limit(sample_limit)
-        .collect()
+    Xs = X.reshape(n, m, dim // m)
+    # a contiguous copy per subspace: matmul on the strided view is
+    # ~1.7x slower, and k-means runs several per step
+    return np.stack(
+        [
+            kmeans_fit(np.ascontiguousarray(Xs[:, sub, :]), 1 << nbits, seed + sub, n_iter)[0]
+            for sub in range(m)
+        ]
     )
-    X = np.array([r["v"] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(X, axis=1, keepdims=True)
-    np.divide(X, norms, out=X, where=norms > 0)
-    return X, rows
 
 
 def pq_fit_codebooks(
@@ -135,9 +93,10 @@ def pq_fit_codebooks(
 
     Returns an ndarray of shape ``(m, 2^nbits, dim // m)``. Sample
     selection and Lloyd iterations are both O(1) in corpus size (see
-    :func:`_sample_matrix`); the output codebook is ~64 KB.
+    :func:`~.similarity._sample_matrix`); the output codebook is
+    ~64 KB.
     """
-    X, _ = _sample_matrix(corpus, vec_col, sample_limit)
+    X = _sample_matrix(corpus, vec_col, sample_limit)
     return _fit_codebooks_matrix(X, m, nbits, seed, n_iter)
 
 
@@ -477,37 +436,25 @@ def ivfpq_build(
 ) -> IvfPqIndex:
     """Build the composed index.
 
-    1. Coarse quantizer: spherical MLlib KMeans (reused from
-       operators/similarity.py — fit on ``sample_fraction`` at scale).
-    2. Cell assignment: one distributed map-only transform.
-    3. Residual codebooks: per-subspace k-means over
-       ``x_norm − centroid(cell)`` on the bounded deterministic
-       sample (driver-side, O(1) in corpus size).
-    4. Encode: Arrow-batched pandas_udf over (vector, cell) — the
-       only full-corpus pass beyond the assignment, map-only.
+    1. Coarse quantizer and residual codebooks, both from ONE bounded
+       deterministic sample collect (:func:`~.similarity.fit_quantizer`,
+       fit on ``sample_fraction`` of the corpus at scale): spherical
+       k-means for the cells, then per-subspace k-means over
+       ``x_norm − centroid(cell)`` of the same sample rows, whose cells
+       the fit already assigned with the corpus pass's rule.
+       Driver-side, O(1) in corpus size.
+    2. Cell assignment and residual encode: Arrow-batched numpy UDFs
+       in one map-only pass over the corpus.
     """
-    import numpy as np
-
-    from .similarity import ivf_assign, ivf_fit_centroids
-
     fit_input = (
         corpus.sample(fraction=sample_fraction, seed=seed)
         if sample_fraction is not None
         else corpus
     )
-    # KMeans fit bounded like ivf_build's fit_limit: hash-ordered
-    # top-k keeps the quantizer fit O(sample) at any corpus size
-    fit_input = fit_input.orderBy(F.xxhash64(F.col(vec_col))).limit(sample_limit)
-    model, centroids = ivf_fit_centroids(fit_input, vec_col, n_cells, seed)
-    assigned = ivf_assign(corpus, model, vec_col)
+    centroids, X, cells = fit_quantizer(fit_input, vec_col, n_cells, seed, sample_limit)
+    codebooks = _fit_codebooks_matrix(X - centroids[cells], m, nbits, seed)
 
-    X, rows = _sample_matrix(
-        assigned, vec_col, sample_limit, extra_cols=(F.col("ivf_cell"),)
-    )
-    cells = np.array([r["ivf_cell"] for r in rows], dtype=int)
-    residuals = X - centroids[cells]
-    codebooks = _fit_codebooks_matrix(residuals, m, nbits, seed)
-
+    assigned = ivf_assign(corpus, centroids, vec_col)
     encoded = _ivfpq_encode(assigned, centroids, codebooks, vec_col, id_col)
     if path is not None:
         (
@@ -695,8 +642,6 @@ def ivfpq_index_append(
     under a hidden prefix and renames in, so a failed append is never
     reader-visible and completed codes become searchable with
     unchanged pruning."""
-    from .similarity import ivf_assign, staged_append
-
     index = ivfpq_index_load(spark, path)
     vec_col = getattr(index, "vec_col", "embedding")
     assigned = ivf_assign(batch, index.centroids, vec_col)

@@ -13,9 +13,12 @@ scales: candidate comparisons never cross cluster boundaries, so the
 quadratic term is bounded by the cell size, not the corpus.
 
 Scale design (the 100 TB story):
-- The quantizer fit is O(sample) — a deterministic hash-ordered top-k
-  (never a full sort) feeds MLlib KMeans, identical to the IVF/PQ
-  fits in operators/similarity.py.
+- The quantizer fit is O(sample) — one collect of a deterministic
+  hash-ordered top-k (never a full sort) feeds a seeded numpy k-means
+  on the driver, the same fit as IVF/IVF-PQ
+  (operators/similarity.py ``fit_quantizer``). No Spark job runs for
+  the fit, and none for auto-sizing when the sample holds the whole
+  corpus.
 - Cell assignment is one Arrow-batched numpy matmul per batch
   (ivf_assign) — linear, shuffle-free.
 - The per-cell greedy pass runs under ``applyInPandas`` grouped by
@@ -25,7 +28,7 @@ Scale design (the 100 TB story):
   n_cells so a cell's float64 matrix (rows × dim × 8 B) fits a task.
   The paper itself runs tens of thousands of clusters for this
   reason.
-- Determinism: seeded KMeans on a deterministic sample, rows sorted
+- Determinism: seeded k-means on a deterministic sample, rows sorted
   by id inside each cell before the greedy order is computed, float64
   throughout — reruns produce identical verdicts.
 """
@@ -95,26 +98,15 @@ def semantic_dedup(
     floor 8) — the same rule as ivf_build — so per-cell quadratic work
     AND grouped-map parallelism both track the corpus.
     """
-    import math
-
     import numpy as np
 
-    from .similarity import ivf_assign, ivf_fit_centroids
+    from .similarity import fit_quantizer, ivf_assign
 
     src = embeddings.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     )
     if centroids is None:
-        if n_cells == "auto":
-            n_rows = src.count()
-            n_cells = max(
-                8,
-                min(4096, 1 << round(math.log2(max(8, math.isqrt(n_rows))))),
-            )
-            # a quantizer can't have more cells than fit points
-            n_cells = max(1, min(n_cells, n_rows))
-        fit_input = src.orderBy(F.xxhash64(F.col("vec"))).limit(fit_limit)
-        _, centroids = ivf_fit_centroids(fit_input, "vec", n_cells, seed)
+        centroids, _, _ = fit_quantizer(src, "vec", n_cells, seed, fit_limit, min_cells=8)
     cents = np.asarray(centroids, dtype=np.float64)
     cnorm = np.linalg.norm(cents, axis=1)
     cnorm[cnorm == 0] = 1.0

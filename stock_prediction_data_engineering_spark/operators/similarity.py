@@ -1,7 +1,8 @@
 """Similarity search over embedding columns (north-star extension,
 BASELINE.json §L5-L7): brute-force cosine top-k as the exact baseline,
 with two approximate scale paths — random-hyperplane LSH bucketing and
-IVF-Flat (MLlib-KMeans coarse quantizer + nprobe cell search).
+IVF-Flat (a coarse quantizer fit by numpy k-means on a bounded sample
+collected to the driver, + nprobe cell search).
 
 Brute force is a broadcast of the query vector + one linear scan with
 a JVM-side fold — correct at any scale but O(corpus) per query. The
@@ -223,101 +224,149 @@ def brute_force_topk(
     )
 
 
-def l2_normalize_expr(vec: Column) -> Column:
-    """Unit-normalize a float-array column (JVM-side transform).
+def _sample_matrix(corpus: DataFrame, vec_col: str, sample_limit: int):
+    """Deterministic bounded sample of unit-normalized vectors, an
+    (n, dim) matrix: the ``sample_limit`` rows with the smallest
+    ``xxhash64(vector)`` — stable across runs and executors, executed
+    as per-partition top-k (TakeOrderedAndProject), never a global
+    sort. The collect is
+    bounded metadata (≤ sample_limit × dim floats, ~4 MB at the
+    defaults) — O(1) in corpus size.
 
-    On the unit sphere, euclidean nearest-centroid assignment is
-    exactly cosine nearest-centroid (|u - v|² = 2 - 2·cos for unit
-    u, v), so a quantizer fit on normalized vectors partitions the
-    corpus along the SAME geometry the cosine search ranks by —
-    spherical k-means via plain KMeans. Zero vectors pass through
-    unchanged (their cosine to anything is undefined anyway)."""
-    n = norm_expr(vec)
-    return F.when(
-        n > 0, F.transform(vec, lambda x: (x.cast("double") / n).cast("float"))
-    ).otherwise(vec)
-
-
-def ivf_fit_centroids(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    seed: int = 42,
-):
-    """Coarse quantizer: MLlib KMeans over the L2-NORMALIZED corpus
-    vectors (spherical k-means — the cell boundaries follow cosine
-    geometry; see :func:`l2_normalize_expr`).
-
-    Returns (model, centroids_ndarray). The model's transform assigns
-    each row to its nearest centroid fully distributed; the centroid
-    matrix itself is tiny (n_cells x dim) and rides in the closure.
-    At 100 TB the fit runs on ``corpus.sample(...)`` — the quantizer
-    only needs a representative sample, not every row.
-    """
+    The top-k orders by the hash of the RAW vector column and
+    normalizes the collected sample driver-side: hashing a JVM-side
+    normalize instead re-evaluates its norm aggregate inside the
+    per-element lambda (O(d²) interpreted after CollapseProject — the
+    operators/winnow.py trap) on EVERY corpus row inside the
+    TakeOrdered scan; measured 10.7 s vs ~1 s for a 20k-row corpus at
+    sf1, and it grows with the corpus while the numpy normalize stays
+    O(sample). Zero vectors stay zero."""
     import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.feature import Normalizer
-    from pyspark.ml.functions import array_to_vector
 
-    # Normalize via MLlib's compiled O(d) Normalizer, not the
-    # l2_normalize_expr lambda: CollapseProject inlines the norm
-    # aggregate into the per-element division — O(d²) interpreted
-    # per row (see operators/winnow.py). Normalizer keeps zero
-    # vectors unchanged, matching l2_normalize_expr's semantics.
-    # The repartition matters because callers bound the fit input
-    # with ORDER BY hash LIMIT n — a single-partition result that
-    # would otherwise serialize the normalize + fit input scan.
-    sc = corpus.sparkSession.sparkContext
-    # hash-partitioned (not round-robin): deterministic placement, so
-    # KMeans|| per-partition init sampling is stable across runs
-    spread = corpus.repartition(
-        sc.defaultParallelism, F.xxhash64(F.col(vec_col))
+    rows = (
+        corpus.select(F.col(vec_col).alias("v"))
+        .orderBy(F.xxhash64(F.col("v")))
+        .limit(sample_limit)
+        .collect()
     )
-    raw = spread.select(array_to_vector(F.col(vec_col)).alias("raw"))
-    feats = (
-        Normalizer(inputCol="raw", outputCol="features", p=2.0)
-        .transform(raw)
-        .select("features")
-    )
-    # KMeans drives ~maxIter jobs over its input; uncached, each one
-    # re-runs the upstream scan + bounded top-k (measured 31 s for a
-    # 16k-row fit at sf10 — all re-scan, not math). The fit input is
-    # sample-bounded by the callers, so caching it is O(sample) memory.
-    feats = feats.cache()
-    try:
-        model = KMeans(k=n_cells, seed=seed, maxIter=10).fit(feats)
-        centroids = np.array(model.clusterCenters())
-    finally:
-        feats.unpersist()
-    return model, centroids
+    X = np.array([r["v"] for r in rows], dtype=np.float64)
+    norms = np.linalg.norm(X, axis=1, keepdims=True)
+    np.divide(X, norms, out=X, where=norms > 0)
+    return X
+
+
+def _nearest(X, cents):
+    """Each row's nearest center by euclidean distance, as the argmax
+    of x·c − ‖c‖²/2 (first maximum wins ties), in row blocks of ~4M
+    scores. The one rule of the k-means fit and :func:`ivf_assign`."""
+    import numpy as np
+
+    half_sq = (cents**2).sum(axis=1) / 2.0
+    step = max(1, (1 << 22) // len(cents))
+    out = np.empty(len(X), dtype=np.int64)
+    for i in range(0, len(X), step):
+        scores = X[i : i + step] @ cents.T
+        scores -= half_sq  # in place: a second score array costs 2x the matmul
+        out[i : i + step] = np.argmax(scores, axis=1)
+    return out
+
+
+def kmeans_fit(X, k: int, seed: int, n_iter: int = 10):
+    """The engine's one k-means (IVF/SemDeDup cells, PQ codebooks) over
+    a driver-side sample ``X`` (n, d): seeded greedy k-means++ init
+    (2 + ln k D²-weighted draws per center, the one lowering the
+    potential most kept), then Lloyd until no assignment changes or
+    ``n_iter`` updates ran. ``k`` is clamped to n; an empty cluster
+    keeps its center. Returns ``(centers, assign)``, ``assign`` being
+    :func:`_nearest` against the returned centers. A bounded sample
+    keeps the fit O(1) in corpus size and free of Spark jobs."""
+    import numpy as np
+
+    n, dim = X.shape
+    if n == 0:
+        raise ValueError("k-means needs at least one sample row")
+    k = min(k, n)
+    rng = np.random.default_rng(seed)
+    XT = np.ascontiguousarray(X.T)
+    sq = (X**2).sum(axis=1)
+    trials = 2 + int(np.log(k))
+    centers = np.empty((k, dim), dtype=np.float64)
+    cand = rng.integers(n, size=1)
+    d2 = np.full(n, np.inf)
+    for j in range(k):
+        # (candidates × rows) squared distances, in place:
+        # ‖x‖² − 2·x·c + ‖c‖², capped by the current D²
+        dc = X[cand] @ XT
+        dc *= -2.0
+        dc += sq
+        dc += sq[cand][:, None]
+        np.minimum(dc, d2, out=dc)
+        best = int(np.argmin(dc.sum(axis=1)))
+        centers[j] = X[cand[best]]
+        d2 = np.maximum(dc[best], 0.0)
+        # the next candidates: rows drawn with probability D²/ΣD²
+        # (rows on a center have a zero-width slot, never drawn)
+        cum = np.cumsum(d2)
+        if cum[-1] > 0:
+            cand = np.searchsorted(cum, rng.random(trials) * cum[-1], side="right")
+            cand = np.minimum(cand, n - 1)
+        else:
+            cand = rng.integers(n, size=trials)
+    assign = _nearest(X, centers)
+    for _ in range(n_iter):
+        # vectorized Lloyd update: per-dimension bincount instead of k
+        # boolean-mask passes (~13x faster on PQ's 256 × 16k × 8)
+        counts = np.bincount(assign, minlength=k)
+        sums = np.stack([np.bincount(assign, weights=XT[c], minlength=k) for c in range(dim)], 1)
+        nz = counts > 0
+        centers[nz] = sums[nz] / counts[nz, None]
+        moved = _nearest(X, centers)
+        if np.array_equal(moved, assign):
+            break
+        assign = moved
+    return centers, assign
+
+
+def fit_quantizer(
+    fit_input: DataFrame,
+    vec_col: str,
+    n_cells: int | str,
+    seed: int,
+    fit_limit: int,
+    min_cells: int = 4,
+    fraction: float = 1.0,
+):
+    """Coarse quantizer from ONE bounded sample collect: k-means on the
+    unit vectors of :func:`_sample_matrix` (|u − v|² = 2 − 2·cos, so
+    the cells follow cosine geometry). Returns ``(centroids, X,
+    cells)``: the model, plus the sample and its cells for fits on the
+    same rows (PQ codebooks, IVF-PQ residuals). ``n_cells="auto"`` is
+    ~sqrt(N) as a power of two in [``min_cells``, 4096]; a sample
+    shorter than ``fit_limit`` is all of ``fit_input`` (a ``fraction``
+    of the corpus), so N needs no count job."""
+    import math
+
+    X = _sample_matrix(fit_input, vec_col, fit_limit)
+    if n_cells == "auto":
+        n_fit = len(X) if len(X) < fit_limit else fit_input.count()
+        root = math.isqrt(int(n_fit / fraction))
+        n_cells = max(min_cells, min(4096, 1 << round(math.log2(max(min_cells, root)))))
+    centroids, cells = kmeans_fit(X, n_cells, seed)
+    return centroids, X, cells
 
 
 def ivf_assign(
-    corpus: DataFrame, model, vec_col: str = "embedding"
+    corpus: DataFrame, centroids, vec_col: str = "embedding"
 ) -> DataFrame:
-    """Add the IVF cell id to every corpus row.
-
-    Accepts the fitted KMeans model or a raw (n_cells, dim) centroid
-    matrix. Assignment is an Arrow-batched numpy matmul against the
-    broadcast-in-closure centroid matrix, NOT ``model.transform``:
-    the MLlib path pays the vector-UDT conversion plus the
-    CollapseProject trap (the norm aggregate inside
-    :func:`l2_normalize_expr`'s per-element lambda re-evaluates O(d²)
-    interpreted — see ``operators/winnow.py``), measured 51 s for a
-    200k-row assignment at sf10 vs ~2 s for the batched matmul. Same
-    math: on unit vectors, euclidean argmin over centroids equals
-    argmax of (x̂·c − ‖c‖²/2); first-minimum tie-break matches MLlib's
-    in-order centroid scan."""
+    """Add the IVF cell id to every corpus row: an Arrow-batched numpy
+    matmul against the (n_cells, dim) centroid matrix, which rides in
+    the closure. Rows are unit-normalized first (zero vectors pass
+    through unscaled), then take the :func:`_nearest` centroid — the
+    same rule and first-maximum tie-break as the fit."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    cents = (
-        np.array(model.clusterCenters())
-        if hasattr(model, "clusterCenters")
-        else np.asarray(model)
-    )
-    C = cents.astype(np.float64).T  # (dim, n_cells)
-    half_sq = (cents.astype(np.float64) ** 2).sum(axis=1) / 2.0
+    cents = np.asarray(centroids, dtype=np.float64)
 
     @pandas_udf("int")
     def _cell(vecs: pd.Series) -> pd.Series:
@@ -326,16 +375,15 @@ def ivf_assign(
         X = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
         norms = np.linalg.norm(X, axis=1)
         norms[norms == 0] = 1.0  # zero vectors pass through unscaled
-        scores = (X / norms[:, None]) @ C - half_sq
-        return pd.Series(np.argmax(scores, axis=1).astype("int32"))
+        return pd.Series(_nearest(X / norms[:, None], cents).astype("int32"))
 
     return corpus.withColumn("ivf_cell", _cell(F.col(vec_col)))
 
 
 class IvfIndex:
     """A built IVF-Flat index: tiny centroid matrix + the cell-assigned
-    corpus table. Build once, search many times — the KMeans quantizer
-    is never refit at query time.
+    corpus table. Build once, search many times — the quantizer is
+    never refit at query time.
 
     When ``path`` was given to :func:`ivf_build`, ``table`` is the
     read-back of a parquet lake partitioned by ``ivf_cell``, so the
@@ -370,13 +418,14 @@ def ivf_build(
     n_cells: int | str = 16,
     seed: int = 42,
     sample_fraction: float | None = None,
-    fit_limit: int | None = 16384,
+    fit_limit: int = 16384,
     path: str | None = None,
     pq_m: int | None = None,
     pq_nbits: int = 8,
 ) -> IvfIndex:
-    """Build the IVF index: fit the coarse quantizer on a sample, then
-    assign every corpus row to its cell (one distributed transform).
+    """Build the IVF index: fit the coarse quantizer on a bounded
+    sample (:func:`fit_quantizer`), then assign every corpus row to
+    its cell (one distributed map-only transform).
 
     ``n_cells="auto"`` sizes the quantizer at ~sqrt(N) rounded to a
     power of two (clamped [4, 4096]) — the standard IVF sizing rule:
@@ -386,54 +435,39 @@ def ivf_build(
     ~3.1 vs ~2.0 for 16 cells @ nprobe 4 at half the scan fraction
     (tools/ann_recall.py's fine config tracks this).
 
-    ``sample_fraction`` bounds the KMeans fit input — at 100 TB the
+    ``sample_fraction`` thins the fit input first — at 100 TB the
     quantizer needs a representative sample, not every row; the full
     corpus only flows through the (cheap, map-only) assignment.
-    ``fit_limit`` (default 16384) hard-caps the fit input regardless:
-    the ``fit_limit`` rows with the smallest ``xxhash64(vector)`` — a
-    deterministic per-partition top-k (TakeOrderedAndProject), never
-    a full sort. Without the cap, a one-shot ``ivf_topk`` at sf10 paid
-    223 s of full-corpus KMeans for a 10-row answer (SWEEP_r4_sf10);
-    the quantizer fit must be O(sample), only the assignment O(corpus).
+    ``fit_limit`` (default 16384) caps the fit sample regardless: the
+    ``fit_limit`` rows with the smallest ``xxhash64(vector)``, a
+    deterministic per-partition top-k collected to the driver, never a
+    full sort. The quantizer fit is O(sample), only the assignment
+    O(corpus) (uncapped, a one-shot ``ivf_topk`` at sf10 once paid
+    223 s of full-corpus k-means for a 10-row answer, SWEEP_r4_sf10).
     ``path`` persists the assignment partitioned by ``ivf_cell`` so
     later searches read only the probed cells' directories.
 
-    ``pq_m`` additionally fits PQ codebooks (sample-bounded, same rule
-    as the quantizer) and attaches a ``codes`` column: the IVF-Flat
-    recall ceiling is candidate MEMBERSHIP (in-cell scoring is already
-    exact cosine), and membership only widens by probing more cells —
-    affordable exactly when the probe scan reads code bytes, not float
-    bytes. See :func:`ivf_search`'s ``shortlist`` stage.
+    ``pq_m`` additionally fits PQ codebooks on the same sample and
+    attaches a ``codes`` column: the IVF-Flat recall ceiling is
+    candidate MEMBERSHIP (in-cell scoring is already exact cosine),
+    and membership only widens by probing more cells — affordable
+    exactly when the probe scan reads code bytes, not float bytes.
+    See :func:`ivf_search`'s ``shortlist`` stage.
     """
     fit_input = (
         corpus.sample(fraction=sample_fraction, seed=seed)
         if sample_fraction is not None
         else corpus
     )
-    if n_cells == "auto":
-        import math
-
-        # size from the SAMPLE when one was requested — auto-sizing
-        # must not re-introduce the full-corpus pass sample_fraction
-        # exists to avoid (estimate: sample count / fraction)
-        if sample_fraction is not None:
-            n_rows = int(fit_input.count() / sample_fraction)
-        else:
-            n_rows = corpus.count()
-        n_cells = max(4, min(4096, 1 << round(math.log2(max(4, math.isqrt(n_rows))))))
-    if fit_limit is not None:
-        # applied AFTER auto-sizing — the cell count keys off corpus
-        # size, the KMeans fit off the bounded sample
-        fit_input = fit_input.orderBy(F.xxhash64(F.col(vec_col))).limit(fit_limit)
-    model, centroids = ivf_fit_centroids(fit_input, vec_col, n_cells, seed)
-    assigned = ivf_assign(corpus, model, vec_col)
+    centroids, X, _ = fit_quantizer(
+        fit_input, vec_col, n_cells, seed, fit_limit, fraction=sample_fraction or 1.0
+    )
+    assigned = ivf_assign(corpus, centroids, vec_col)
     codebooks = None
     if pq_m is not None:
-        from .pq import pq_encode_df, pq_fit_codebooks  # lazy: pq imports us
+        from .pq import _fit_codebooks_matrix, pq_encode_df  # lazy: pq imports us
 
-        codebooks = pq_fit_codebooks(
-            fit_input, vec_col, m=pq_m, nbits=pq_nbits, seed=seed
-        )
+        codebooks = _fit_codebooks_matrix(X, pq_m, pq_nbits, seed)
         assigned = pq_encode_df(assigned, codebooks, vec_col)
     if path is not None:
         (
@@ -556,7 +590,7 @@ def ivf_index_write(
     n_cells: int | str = 16,
     seed: int = 42,
     sample_fraction: float | None = None,
-    fit_limit: int | None = 16384,
+    fit_limit: int = 16384,
     pq_m: int | None = None,
     pq_nbits: int = 8,
 ) -> IvfIndex:

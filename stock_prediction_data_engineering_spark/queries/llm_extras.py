@@ -168,7 +168,7 @@ def q_dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("q_semantic_dedup")
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-scoped semantic dedup (SemDeDup, Abbas et al. 2023):
-    seeded-KMeans cells, per-cell greedy prune keeping the member
+    seeded k-means cells, per-cell greedy prune keeping the member
     least similar to its centroid. Rows-only — cell boundaries are
     model-dependent; the greedy rule is pinned against a driver-side
     numpy twin in tests/test_semdedup.py. tau sits at the synthetic
@@ -190,8 +190,9 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q_ann_ivf")
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-Flat approximate top-k (L7 scale path #2): MLlib-KMeans
-    coarse quantizer, nprobe nearest cells brute-forced. Rows-only —
+    """IVF-Flat approximate top-k (L7 scale path #2): coarse quantizer
+    fit by seeded numpy k-means on a bounded sample collected to the
+    driver, nprobe nearest cells brute-forced. Rows-only —
     cell boundaries are model-dependent, not SQL-expressible."""
     emb = table(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 0)

@@ -128,9 +128,10 @@ def q_topk_similar(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroids, component-wise — the reduce step
-    of k-means / IVF training (operators/similarity.py fits its
-    quantizer through MLlib; this is the same aggregate expressed as a
-    declarative query, per (label, dimension)).
+    of k-means / IVF training (operators/similarity.py ``kmeans_fit``
+    runs it in numpy on a driver-side sample; this is the same
+    aggregate expressed as a declarative query, per (label,
+    dimension)).
 
     Float discipline: float-typed components widen to DOUBLE (exact,
     IEEE subset) and quantize to integer micro-units via floor BEFORE

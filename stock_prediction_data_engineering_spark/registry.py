@@ -296,7 +296,7 @@ ROWS_ONLY: tuple[str, ...] = (
     "q_dedup_embedding",
     "q_dedup_embedding_clusters",    # R144 cluster-grain output form
     "q_ann_lsh",                     # L7 hyperplane-LSH buckets
-    "q_ann_ivf",                     # L7 IVF-Flat (KMeans cells)
+    "q_ann_ivf",                     # L7 IVF-Flat (k-means cells)
     "q_ann_pq",                      # L7 product quantization (ADC)
     "q_ann_ivfpq",                   # L7 composed IVF-PQ (residual ADC)
     "q_ann_pq_rerank",               # L7 ADC shortlist → exact re-rank

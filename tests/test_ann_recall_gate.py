@@ -3,11 +3,12 @@ failing test, per the round-3 review).
 
 Floors are pinned with margin below the measured values on the
 deterministic sf0.001 fixture (fixed query slice, hash-synthesized
-LSH planes, seeded KMeans — measured 2026-08-15 after the batched
-numpy assignment + deterministic hash-partitioned fit landed:
-recall_lsh 0.24 / lift 1.89, recall_ivf 0.68 / lift 1.74,
-recall_ivf_fine 0.64 / lift 3.36, recall_pq 0.68 at 32× byte
-compression, recall_ivfpq 0.46). A similarity-operator change that degrades recall or
+LSH planes, seeded k-means fit on the driver, so the figures no longer
+depend on the core count — measured with the numpy quantizer:
+recall_lsh 0.24 / lift 1.89, recall_ivf 0.74 / lift 2.83,
+recall_ivf_fine 0.64 / lift 4.75, recall_pq 0.74 at 32× byte
+compression, recall_ivfpq 0.62; every rerank path 0.98 or 1.0).
+A similarity-operator change that degrades recall or
 recall-per-scanned-row below these floors now fails the suite instead
 of silently shipping a worse index. Absolute recall on this synthetic
 corpus is bounded by its weak cosine structure — the LIFT (recall /

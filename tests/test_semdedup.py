@@ -15,6 +15,7 @@ from stock_prediction_data_engineering_spark.operators.semdedup import (
     greedy_keep,
     semantic_dedup,
 )
+from stock_prediction_data_engineering_spark.operators.similarity import kmeans_fit
 
 from conftest import SF_SMOKE
 
@@ -26,9 +27,9 @@ def _fixture(spark):
     pdf = emb.select("vec_id", "embedding").toPandas()
     X = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf.embedding])
     ids = pdf.vec_id.to_numpy(dtype=np.int64)
-    # deterministic centroids independent of MLlib: 4 corpus rows,
-    # hash-picked (any fixed matrix works — the test pins the greedy
-    # distribution, not the quantizer)
+    # deterministic centroids independent of the quantizer fit: the 4
+    # smallest-id corpus rows (any fixed matrix works — the test pins
+    # the greedy distribution, not the quantizer)
     order = np.argsort(ids)
     cents = X[order[:4]].copy()
     return emb, X, ids, cents
@@ -118,3 +119,47 @@ def test_registered_query_runs(spark):
     total = table(spark, SF_SMOKE, "embeddings").count()
     assert n == total
     assert out.filter(F.col("kept")).count() < total  # some drops
+
+
+def test_kmeans_fit_deterministic_clamped_and_consistent():
+    """The shared k-means (IVF, SemDeDup and PQ): same seed, same
+    answer; k clamps to the sample size; duplicate rows and an empty
+    cluster leave no NaN; the returned assignment is the argmin of the
+    euclidean distance to the returned centers."""
+    rng = np.random.default_rng(5)
+    X = rng.normal(size=(120, 6))
+    c1, a1 = kmeans_fit(X, 7, seed=3)
+    c2, a2 = kmeans_fit(X, 7, seed=3)
+    assert np.array_equal(c1, c2) and np.array_equal(a1, a2)
+    d2 = ((X[:, None, :] - c1[None, :, :]) ** 2).sum(axis=2)
+    assert np.array_equal(a1, d2.argmin(axis=1))
+
+    c, a = kmeans_fit(X[:5], 16, seed=0)
+    assert c.shape == (5, 6) and sorted(a) == [0, 1, 2, 3, 4]
+
+    # two distinct points, each repeated: k=4 leaves two clusters
+    # empty after the first Lloyd step; they keep their centers
+    D = np.repeat(X[:2], 10, axis=0)
+    c, a = kmeans_fit(D, 4, seed=1)
+    assert c.shape == (4, 6) and not np.isnan(c).any()
+    assert (np.bincount(a, minlength=4) == 0).sum() == 2
+    d2 = ((D[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
+    assert np.array_equal(a, d2.argmin(axis=1))
+
+
+def test_construction_starts_at_most_two_jobs(spark):
+    """Building the verdict frame runs at most 2 Spark jobs: the one
+    bounded sample collect (on SF_SMOKE the sample holds the whole
+    corpus, so auto-sizing needs no count job); the quantizer fit runs
+    on the driver and the rest of the plan is lazy."""
+    emb = table(spark, SF_SMOKE, "embeddings")
+    sc = spark.sparkContext
+    group = "test-semdedup-construction"
+    sc.setJobGroup(group, "semantic_dedup construction")
+    try:
+        out = semantic_dedup(emb, tau=TAU)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("test-idle", "")
+    assert 1 <= len(jobs) <= 2, jobs
+    assert out.count() == emb.count()

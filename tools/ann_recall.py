@@ -57,7 +57,7 @@ def measure(spark, sf_dir: str, k: int = 10, query_mod: int = 101) -> dict:
     # the searched corpus just excludes the query row. Scanned rows
     # are COUNTED in the probed cells for both configs — identical
     # accounting, so the coarse-vs-fine lift comparison is apples to
-    # apples even with unbalanced KMeans cells.
+    # apples even with unbalanced k-means cells.
     import numpy as np
 
     from stock_prediction_data_engineering_spark.operators import pq as pqm
