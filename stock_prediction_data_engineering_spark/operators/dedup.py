@@ -6,11 +6,16 @@ Scale posture (the whole point of these operators):
 
 - every method is shuffle-bounded by *candidate generation* — LSH
   band buckets or signature chunks — never by all-pairs comparison;
-- shingling/banding/joins/verification are JVM-side column
-  expressions; the one Python touchpoint is the MinHash signature
-  kernel, an Arrow-batched numpy matrix op (the JVM form, 64
-  interpreted higher-order lambdas, cost ~30 s of Janino codegen per
-  plan-cache miss, ran no faster, and was removed);
+- shingling/banding/joins are JVM-side column expressions; Python
+  runs in two Arrow-batched numpy kernels: the MinHash signature
+  kernel (the JVM form, 64 interpreted higher-order lambdas, cost
+  ~30 s of Janino codegen per plan-cache miss, ran no faster, and was
+  removed) and, above a measured candidate volume, the exact verify
+  intersect (see :func:`_verify`);
+- MinHash-LSH and the exact similarity join (operators/ssjoin.py)
+  are built from shared named stages: collapse (:func:`_collapse`),
+  signatures, candidates, verify (:func:`_verify`) and assemble
+  (:func:`_expand_members`);
 - verification (exact Jaccard / hamming / cosine) runs only on
   bucket-colliding pairs, which is the textbook MinHash-LSH design:
   band collisions have probability s^r for true similarity s, so
@@ -44,13 +49,14 @@ def _spread(df: DataFrame) -> DataFrame:
 
 _MERSENNE = 2147483647  # 2^31 - 1: keeps a*h+b inside long range
 
-# Distinct-text count above which minhash_lsh_pairs' exact verify runs
-# the Arrow sort+searchsorted kernel instead of JVM array_intersect.
-# The kernel wins ~95 us/pair but costs a flat ~1.3 s Python-worker /
-# Arrow round-trip per run; candidates scale with distinct text, so
-# the crossover (~14 k pairs) maps to a distinct-count gate. Measured:
-# d=4,992 (sf0.1/sf1 fixtures) JVM wins by the full constant; d=38,845
-# (sf1u) the kernel already wins; d=377 k (sf10u) it wins 12+ s.
+# Distinct-text count from which the exact verify stage (_verify, its
+# one reader) runs the Arrow sort+searchsorted kernel instead of JVM
+# array_intersect. The kernel wins ~95 us/pair but costs a flat ~1.3 s
+# Python-worker / Arrow round-trip per run; candidates scale with
+# distinct text, so the crossover (~14 k pairs) maps to a
+# distinct-count gate. Measured: d=4,992 (sf0.1/sf1 fixtures) JVM wins
+# by the full constant; d=38,845 (sf1u) the kernel already wins;
+# d=377 k (sf10u) it wins 12+ s.
 _VERIFY_KERNEL_MIN_DISTINCT = 20_000
 
 # Join-strategy gates for sides whose PLANNER estimate is unusable —
@@ -64,7 +70,8 @@ _VERIFY_KERNEL_MIN_DISTINCT = 20_000
 # side's per-row width — scale-adaptive, not fixture-tuned:
 # ~1.3 KB/row for shingle-hash arrays (≈300 int32s at the corpus'
 # ~300-char texts), ~150 B/row for the packed bucket vectors,
-# ~50 B/row for id/hash/count metadata. The ARRAY bound is sized from
+# ~50 B/row for id/hash/count metadata. The ARRAY bound (the verify
+# attaches, _verify) is sized from
 # guide §3.1's broadcast guidance (a few hundred MB is fine; the hard
 # cap is 8 GB / 512 M rows): 400 k rows ≈ 0.5 GB — measured at sf10u
 # (377 k distinct): broadcast verify beats the shuffle_hash
@@ -125,6 +132,57 @@ def _dup_profile(members: DataFrame, key: str) -> tuple[int, int, bool]:
         F.count("*").alias("n"), F.countDistinct(key).alias("d")
     ).first()
     return prof.n, prof.d, prof.d * 100 <= prof.n * 95
+
+
+def _collapse(
+    docs: DataFrame, id_col: str, text_col: str, profile: bool = True
+) -> tuple[DataFrame, int | None, int, DataFrame | None, DataFrame | None]:
+    """Collapse prologue of the set-similarity operators
+    (:func:`minhash_lsh_pairs`, operators/ssjoin.py): returns
+    ``(members, n, d, reps, rep_src)``.
+
+    ``members`` is (id, __th), one row per document, lazily
+    checkpointed and left scan-partitioned (md5 is cheap next to a
+    full-corpus repartition, and every consumer shuffles anyway). With
+    ``profile``, ``(n, d)`` and the verdict come from
+    :func:`_dup_profile`, and ``reps``/``rep_src`` are None when the
+    direct pipeline runs. Without it (cluster output, which needs the
+    clusters anyway) no profile job is paid (~1.5 s at sf1,
+    BENCHDIFF_r10_sf1): the collapse runs, ``n`` is None and ``d`` is
+    the count of the rep checkpoint every later stage reuses.
+
+    Representatives come from ONE aggregate, not groupBy + semi-join
+    + rescan (two more full-corpus exchanges and a second scan): a
+    __th group's texts are byte-identical, so first(text) is
+    deterministic and min(id) is the representative. ``reps`` is
+    (__th, id); ``rep_src`` is (id, __t), their texts, spread
+    (:func:`_spread`) because AQE coalesces the aggregate's exchange
+    to ONE partition at small distinct counts and the CPU-heavy stages
+    after it would run on one task (+1.2 s at sf1, d=4,992)."""
+    th = F.md5(F.col(text_col).cast("string"))
+    members = docs.select(
+        F.col(id_col).alias("id"), th.alias("__th")
+    ).localCheckpoint(eager=False)
+    n = d = None
+    if profile:
+        n, d, collapse = _dup_profile(members, "__th")
+        if not collapse:
+            return members, n, d, None, None
+    rep_docs = (
+        docs.groupBy(th.alias("__th"))
+        .agg(
+            F.min(F.col(id_col)).alias("id"),
+            F.first(F.col(text_col)).alias("__text"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    # the count completes the checkpoint in its own job before any
+    # consumer runs (see the shingle table in minhash_lsh_pairs), and
+    # is the distinct count where no profile ran
+    n_reps = rep_docs.count()
+    d = n_reps if d is None else d
+    rep_src = _spread(rep_docs.select("id", F.col("__text").alias("__t")))
+    return members, n, d, rep_docs.select("__th", "id"), rep_src
 
 
 def _expand_members(
@@ -260,49 +318,26 @@ def hashed_shingle_set(text: Column | str, k: int) -> Column:
     return F.array_distinct(grams)
 
 
-def minhash_signature_np(num_hashes: int = 64):
-    """num_hashes-wide MinHash signature over pre-hashed shingles (see
-    :func:`shingle_hashes`): for seed i, min over shingles of
-    (a_i * h + b_i) mod p, with (a_i, b_i) from :func:`_mix_coeffs`.
-
-    Arrow-batched numpy kernel: a (num_hashes × n_shingles)
-    broadcasted multiply-mod-min per document, int64-exact (a < 2^31
-    and h < 2^31 so a*h+b < 2^62). The per-doc Python loop is
-    amortized — each iteration is one C-level matrix op over the whole
-    signature; Arrow moves only the long arrays."""
-    from pyspark.sql.types import ArrayType, LongType
-
-    coeffs = [_mix_coeffs(i) for i in range(num_hashes)]
-    a_vec = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-    b_vec = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _sig(hashes: pd.Series) -> pd.Series:
-        out = []
-        for h in hashes:
-            arr = np.asarray(h, dtype=np.int64)[None, :]
-            out.append(((a_vec * arr + b_vec) % _MERSENNE).min(axis=1))
-        return pd.Series(out)
-
-    return _sig
-
-
 def minhash_signature_packed_np(num_hashes: int = 64, n_buckets: int = 128):
-    """The :func:`minhash_signature_np` kernel extended to ALSO emit a
-    packed hash-bucket-count vector per document, for the verify
-    stage's sound intersection upper bound (see minhash_lsh_pairs):
+    """The engine's one MinHash signature kernel, Arrow-batched numpy,
+    emitting per document:
 
-    - ``sig``    — identical to minhash_signature_np (same family,
-      same int64 math, bit-identical);
+    - ``sig``    — the num_hashes-wide MinHash signature over pre-hashed
+      shingles (see :func:`shingle_hashes`): for seed i, min over
+      shingles of (a_i * h + b_i) mod p, with (a_i, b_i) from
+      :func:`_mix_coeffs`, as one broadcasted multiply-mod-min per
+      document, int64-exact (a < 2^31 and h < 2^31 so a*h+b < 2^62);
     - ``packed`` — ``n_buckets`` counts of the doc's shingle hashes by
       ``h & (n_buckets - 1)``, 8 bits each, packed little-endian into
       ``n_buckets / 8`` bigints. NULL if any bucket count exceeds 255
       (the byte cap would silently UNDERstate the bound and make it
-      unsound) — the filter treats NULL as "cannot bound, must verify".
+      unsound) — :func:`_packed_prune` treats NULL as "cannot bound,
+      must verify".
 
-    Computing the counts here is one vectorized bincount inside the
-    Arrow pass the signatures already pay for — the hash arrays cross
-    the Python boundary exactly once either way."""
+    The per-doc Python loop is amortized: each iteration is one
+    C-level matrix op over the whole signature, and Arrow moves only
+    the long arrays. The counts are one vectorized bincount inside the
+    same pass, so the hash arrays cross the Python boundary once."""
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     coeffs = [_mix_coeffs(i) for i in range(num_hashes)]
@@ -334,6 +369,17 @@ def minhash_signature_packed_np(num_hashes: int = 64, n_buckets: int = 128):
         return pd.DataFrame({"sig": sigs, "packed": packs})
 
     return _sigp
+
+
+def _signatures(base: DataFrame, num_hashes: int) -> DataFrame:
+    """Signature stage: (id, sh_hashes) -> (id, n, sig, packed), with
+    ``n`` the exact set size (sh_hashes is distinct by construction)
+    and ``sig``/``packed`` from :func:`minhash_signature_packed_np`."""
+    return base.select(
+        "id",
+        F.size("sh_hashes").alias("n"),
+        minhash_signature_packed_np(num_hashes)(F.col("sh_hashes")).alias("sp"),
+    ).select("id", "n", F.col("sp.sig").alias("sig"), F.col("sp.packed").alias("packed"))
 
 
 def _packed_intersect_ub(pa: Column, pb: Column, n_words: int = 16) -> Column:
@@ -369,17 +415,16 @@ def _intersect_counts_np(batches):
     hash set per row (measured ~110 us/pair on 600-element int
     arrays); this kernel's per-pair ``np.sort`` + ``searchsorted``
     measures ~15 us, and a one-element cache skips re-sorting
-    consecutive rows that share ``id_a`` (both call sites arrange for
-    runs: this module repartitions candidates by id_a, and
-    operators/ssjoin.py sorts its pairs by id_a within partitions
-    before handing them over). Exactness is preserved: both arrays
-    are distinct by construction, so the match count IS |A ∩ B| —
-    bit-identical to the JVM form; the Jaccard division/round stays
-    JVM-side so float semantics never cross the boundary.
+    consecutive rows that share ``id_a`` (:func:`_verify`, its one
+    caller, hands rows over in id_a runs). Exactness is preserved:
+    both arrays are distinct by construction, so the match count IS
+    |A ∩ B| — bit-identical to the JVM form; the Jaccard
+    division/round stays JVM-side so float semantics never cross the
+    boundary.
 
     int64 internally, so the same kernel serves both 31-bit shingle
-    hashes (this module) and full-range xxhash64 gram hashes
-    (operators/ssjoin.py's verify stage).
+    hashes (MinHash) and full-range xxhash64 gram hashes
+    (operators/ssjoin.py).
 
     A fully-batch-vectorized variant (tag elements with the pair index
     in the int64 high bits, one np.sort per batch, count adjacent
@@ -461,6 +506,158 @@ def _band_table(
     ).select("id", *extra, "b.band", "b.band_hash")
 
 
+def _bucket_candidates(
+    banded: DataFrame, jaccard_threshold: float, n_parts: int
+) -> DataFrame:
+    """Candidate stage of :func:`minhash_lsh_pairs`: band table (id, n,
+    band, band_hash) -> distinct (id_a, id_b, n_a, n_b) with
+    id_a < id_b, hash-partitioned by id_a over ``n_parts`` partitions.
+
+    Bucket GROUPING, not a band-table self-join: group the band table
+    once by (band, band_hash), collect each bucket's (id, n) members
+    sorted by id, and stream every within-bucket pair out of two
+    Generates. The self-join form read the 6 M-row (at sf10u) band
+    table twice and, because the checkpoint's frozen estimate undercuts
+    the 64 MB auto threshold at EVERY scale, static-broadcast one full
+    copy of it (a serial driver-side HashedRelation build). The grouped
+    form's only exchange carries the same (id, n) rows exactly once,
+    partially collected map-side; array_sort makes the bucket order
+    deterministic and gives id_a < id_b for free. That exchange is left
+    to AQE: a repartition(n_parts, band, band_hash) before the groupBy
+    measured no gain at sf10u and +14% on the sf0.1 bench row.
+
+    The lossless PPJoin length filter (J(A,B) <= min/max of the set
+    sizes) drops size-mismatched pairs before they cost dedup or verify
+    work (14.6 M -> 9.4 M candidates at sf10u); the 5e-5 slack mirrors
+    the round(jaccard, 4) of the final filter.
+
+    ONE exchange serves both the pair dedup and the verify layout: the
+    explicit repartition runs first, and dropDuplicates' clustered
+    distribution on (id_a, id_b) is satisfied by hash partitioning on
+    id_a. The explicit count also keeps AQE's byte-based coalescing
+    from squeezing the CPU-heavy verify into a few tasks (candidate
+    rows are tiny in bytes); a user-specified repartition is exempt."""
+    buckets = (
+        banded.groupBy("band", "band_hash")
+        .agg(F.array_sort(F.collect_list(F.struct("id", "n"))).alias("__ms"))
+        .filter(F.size("__ms") >= 2)
+        .select("__ms")
+    )
+    rest = F.slice("__ms", F.col("__i0") + F.lit(2), F.size("__ms") - F.col("__i0") - F.lit(1))
+    return (
+        buckets.select("__ms", F.posexplode("__ms").alias("__i0", "__a"))
+        .filter(F.col("__i0") < F.size("__ms") - 1)
+        .select(
+            F.col("__a.id").alias("id_a"),
+            F.col("__a.n").alias("n_a"),
+            F.explode(rest).alias("__b"),
+        )
+        .select("id_a", F.col("__b.id").alias("id_b"), "n_a", F.col("__b.n").alias("n_b"))
+        .filter(
+            F.least("n_a", "n_b").cast("double")
+            >= (jaccard_threshold - 5e-5) * F.greatest("n_a", "n_b")
+        )
+        .select("id_a", "id_b", "n_a", "n_b")
+        .repartition(n_parts, "id_a")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _packed_prune(
+    cands: DataFrame, sp: DataFrame, d: int, jaccard_threshold: float
+) -> DataFrame:
+    """Candidate prune of :func:`minhash_lsh_pairs` before any array
+    payload moves: attach the 128-byte packed bucket-count vectors of
+    ``sp`` (never the 5 KB hash arrays) and drop every pair whose sound
+    bound (:func:`_packed_intersect_ub`) proves J below the threshold;
+    a NULL vector (uncappable doc) must verify.
+
+    The candidate J distribution is bimodal at sf10u (9.4 M pairs at
+    J <= 0.4 vs 15 k true pairs at J >= 0.8), so at a 0.7 threshold the
+    bound clears ~99.8% of the exact-intersect work (verify stage
+    25.6 s -> 3.5 s). The bound carries ~0.1-0.15 of additive J slack
+    (the per-bucket min picks up noise from non-shared elements), so
+    below 0.5 it proves almost nothing and its two joins are pure
+    overhead; it runs only from 0.5 (the clusters query verifies at
+    0.2, where ~60% of candidates genuinely pass). The packed table
+    scales with the distinct count ``d`` and descends from a checkpoint
+    whose frozen estimate would static-broadcast it at any scale, so
+    the measured count gates both joins (:func:`_sized`)."""
+    if jaccard_threshold < 0.5:
+        return cands
+
+    def side(s: str) -> DataFrame:
+        cols = [F.col("id").alias(f"id_{s}"), F.col("packed").alias(f"pk_{s}")]
+        return _sized(sp.select(*cols), d, _BROADCAST_MAX_ROWS_PACKED)
+
+    ub = _packed_intersect_ub(F.col("pk_a"), F.col("pk_b"))
+    bound = ub.cast("double") >= (jaccard_threshold - 5e-5) * (
+        F.col("n_a") + F.col("n_b") - ub
+    )
+    return (
+        cands.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .filter(F.col("pk_a").isNull() | F.col("pk_b").isNull() | bound)
+        .select("id_a", "id_b", "n_a", "n_b")
+    )
+
+
+def _verify(pairs: DataFrame, arrays: DataFrame, d: int) -> DataFrame:
+    """Exact verify stage of the set-similarity operators
+    (:func:`minhash_lsh_pairs`, operators/ssjoin.py): |A ∩ B| for every
+    candidate pair, returned as (id_a, id_b, n_a, n_b, inter). The
+    Jaccard arithmetic stays with each caller.
+
+    ``pairs`` holds (id_a, id_b); ``arrays`` holds one row per ``id``
+    with ``h``, a distinct hash array, and ``n``, its size. Every
+    column of ``arrays`` attaches to both sides with an _a/_b suffix,
+    so pairs that already carry n_a/n_b (MinHash's length filter needs
+    them) pass an (id, h) table. ``d`` is the measured distinct-text
+    count; both decisions read it:
+
+    - Attach joins: broadcast while d fits _BROADCAST_MAX_ROWS_ARRAY,
+      shuffle_hash above it (no sort of millions of array-carrying
+      rows, as a merge join would impose). The arrays descend from
+      checkpoints whose frozen estimates would static-broadcast them
+      at any scale, so the measurement decides (:func:`_sized`).
+    - Intersect: JVM ``array_intersect`` below
+      _VERIFY_KERNEL_MIN_DISTINCT, the Arrow kernel
+      :func:`_intersect_counts_np` from it on; both exact on distinct
+      arrays, with the same integer (coalesce matches the kernel's 0
+      for a null or empty side).
+
+    The kernel sorts each left array once per run of equal id_a. Above
+    the budget the second attach re-exchanges the pair stream by id_b,
+    so a sort within partitions on id_a after the last attach restores
+    the runs. Under broadcast the attaches keep the candidate stage's
+    stream order and no sort runs: a sort of the narrow pairs before
+    the joins is dropped by Catalyst (EliminateSorts removes a sort
+    under a join), and one of the array-carrying rows after them is
+    not paid where candidate volume is largest."""
+
+    def side(s: str) -> DataFrame:
+        cols = [F.col(c).alias(f"{c}_{s}") for c in arrays.columns]
+        return _sized(arrays.select(*cols), d, _BROADCAST_MAX_ROWS_ARRAY, big="shuffle_hash")
+
+    paired = (
+        pairs.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .select("id_a", "id_b", "n_a", "n_b", "h_a", "h_b")
+    )
+    if d < _VERIFY_KERNEL_MIN_DISTINCT:
+        inter = F.coalesce(F.size(F.array_intersect("h_a", "h_b")), F.lit(0))
+        return paired.select("id_a", "id_b", "n_a", "n_b", inter.alias("inter"))
+    if d > _BROADCAST_MAX_ROWS_ARRAY:
+        paired = paired.sortWithinPartitions("id_a")
+    return paired.mapInPandas(
+        _intersect_counts_np,
+        StructType(
+            [paired.schema[c] for c in ("id_a", "id_b", "n_a", "n_b")]
+            + [StructField("inter", IntegerType())]
+        ),
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -473,19 +670,22 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs by MinHash-LSH.
 
-    Pipeline: shingle -> base-hash each shingle once -> 64 linear-mix
-    MinHash values -> 16 bands of 4 -> explode bands -> self-join on
-    (band, band_hash) for candidates -> verify with Jaccard over the
-    hashed shingle sets -> threshold.
+    Stages: exact-duplicate collapse (:func:`_collapse`) -> shingle,
+    base-hashing each shingle once (:func:`hashed_shingle_set`) -> 64
+    linear-mix MinHash values (:func:`_signatures`) -> 16 bands of 4
+    (:func:`_band_table`) -> bucket candidates
+    (:func:`_bucket_candidates`) -> packed-bound prune
+    (:func:`_packed_prune`) -> exact verify (:func:`_verify`) ->
+    Jaccard threshold -> assemble (:func:`_expand_members`, or
+    :func:`_minhash_clusters`).
 
     Shuffle discipline (the part that matters at 100 TB): the band
-    table carries ONLY (id, band, band_hash) — never the shingle
-    arrays — so the 16-way band explode shuffles 24 bytes per band,
+    table carries ONLY (id, n, band, band_hash) — never the shingle
+    arrays — so the 16-way band explode shuffles a few bytes per band,
     not 16 copies of each document's shingles. Candidate pairs are
-    deduplicated first and only then joined back to the (long-typed)
-    shingle-hash arrays for verification, so array payloads move
-    through exactly one candidate-bounded hash join per side, and the
-    verify intersect runs on longs, not strings.
+    deduplicated first and only then joined to the shingle-hash
+    arrays, so array payloads move through exactly one
+    candidate-bounded join per side.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, distinct.
 
@@ -512,320 +712,40 @@ def minhash_lsh_pairs(
     """
     if output not in ("pairs", "clusters"):
         raise ValueError(f"output must be 'pairs' or 'clusters', got {output!r}")
-    rows_per_band = num_hashes // bands
     n_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    # members stays scan-partitioned: md5 over the raw text is cheap
-    # relative to a full-corpus repartition, and every consumer is an
-    # aggregate or a keyed join that shuffles anyway.
-    members = docs.select(
-        F.col(id_col).alias("id"),
-        F.md5(F.col(text_col).cast("string")).alias("__th"),
-    ).localCheckpoint(eager=False)
-    prof_d: int | None = None
-    prof_n: int | None = None
-    if output == "clusters":
-        # cluster output NEEDS the cluster structure — no collapse
-        # decision to make, so DON'T pay the (count + countDistinct)
-        # profile aggregate here: the interleaved sf1 A/B measured it
-        # at ~1.5 s flat on this path (BENCHDIFF_r10_sf1, 1.6x). The
-        # verify gate's distinct count is read instead off the rep
-        # table the collapse branch materializes anyway (below).
-        collapse = True
-    else:
-        prof_n, prof_d, collapse = _dup_profile(members, "__th")
-    if collapse:
-        # Representative selection as ONE aggregate instead of
-        # [groupBy + semi-join + full rescan]: within a __th group
-        # every text is byte-identical, so first(text) is
-        # deterministic, and min(id) is the canonical representative.
-        # The agg output is hash-distributed by __th across the
-        # shuffle parallelism, so the CPU-heavy shingle stage below
-        # inherits a balanced layout with no _spread repartition —
-        # two full-corpus exchanges and a second scan saved vs the
-        # semi-join form.
-        rep_docs = (
-            docs.groupBy(F.md5(F.col(text_col).cast("string")).alias("__th"))
-            .agg(
-                F.min(F.col(id_col)).alias("id"),
-                F.first(F.col(text_col)).alias("__text"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        reps = rep_docs.select("__th", "id")
-        # _spread: the rep aggregate's output is hash-distributed by
-        # __th, but at small DISTINCT counts AQE coalesces that
-        # exchange to ONE partition (few MB of text < the 64 MB
-        # advisory size) and the CPU-heavy shingle/signature stages
-        # below serialize onto a single task — measured +1.2 s on the
-        # sf1 fixture (d=4,992), the real mechanism behind the
-        # round-9 "flat small-scale constant". A user-specified
-        # repartition is exempt from coalescing; it costs one
-        # REP-sized exchange (d rows, never the corpus), noise at
-        # sf10u against the stages it parallelizes.
-        base_src = _spread(rep_docs.select("id", F.col("__text").alias("__t")))
-        if prof_d is None:
-            # the distinct count = the rep table's row count: a count
-            # over the checkpoint every later stage reuses, so the
-            # only added cost is one job dispatch — the rep aggregate
-            # itself was going to materialize regardless. It feeds the
-            # verify-kernel gate AND the join-strategy gates below.
-            prof_d = rep_docs.count()
-    else:
+    members, n, d, reps, src = _collapse(
+        docs, id_col, text_col, profile=output == "pairs"
+    )
+    if reps is None:
         # direct pipeline: repartition for shingle/signature CPU
         # parallelism (byte-based input splits would underparallelize
         # a small file)
-        base_src = _spread(docs).select(
+        src = _spread(docs).select(
             F.col(id_col).alias("id"), F.col(text_col).alias("__t")
         )
-    # The Arrow sort+searchsorted verify kernel wins per pair
-    # (~15 us vs ~110 us for JVM array_intersect's per-row hash-set
-    # build) but pays a flat Python-worker/Arrow round-trip that
-    # only amortizes when the candidate set is large. Candidate
-    # volume scales with DISTINCT text (the pipeline runs on one
-    # representative per distinct text), so the gate reads the
-    # distinct count — from the pairs path's duplication profile,
-    # or from the cluster path's rep-table count above. Measured
-    # crossover sits between d=4,992 (kernel loses ~1.3 s flat,
-    # bench.py at sf0.1) and d=38,845 (kernel wins, sf1u); at
-    # d=377 k (sf10u) it wins 12+ s. Both branches are exact on
-    # the distinct hashed-shingle arrays — bit-identical answers
-    # (pinned by tests/test_dedup_similarity.py equivalence test).
-    use_arrow_verify = prof_d >= _VERIFY_KERNEL_MIN_DISTINCT
     # The hashed-shingle table feeds three consumers (signatures and
-    # both verify sides); a lazy localCheckpoint computes the
-    # shingling once per invocation instead of three times. See
-    # operators/ssjoin.py for the persist-vs-localCheckpoint trade.
-    base = base_src.select(
-        "id",
-        hashed_shingle_set("__t", k).alias("sh_hashes"),
-    ).localCheckpoint(eager=False)
-
-    # Signature via the Arrow-batched numpy kernel: the JVM
-    # higher-order form is interpreted (lambdas don't participate in
-    # whole-stage codegen) and measured ~5x slower at 64 hashes; the
-    # surrounding pipeline (shingling, banding, candidate join, verify)
-    # stays entirely JVM-side. The packed bucket counts for the verify
-    # bound ride the same Arrow pass; the kernel output feeds both the
-    # band table and the packed-vector join, so it is checkpointed
-    # (id + n + 64-long sig + 16-long packed ≈ 700 B per DISTINCT doc).
-    sp = (
-        base.select(
-            "id",
-            F.size("sh_hashes").alias("n"),
-            minhash_signature_packed_np(num_hashes)(
-                F.col("sh_hashes")
-            ).alias("sp"),
-        )
-        .select("id", "n", F.col("sp.sig").alias("sig"), F.col("sp.packed").alias("packed"))
-        .localCheckpoint(eager=False)
-    )
-
-    # The band table feeds exactly one consumer (the bucket groupBy
-    # below), so it needs no materialization barrier of its own — the
-    # expensive inputs behind it (the Arrow minhash kernel) are already
-    # checkpointed in ``sp``. The set SIZE rides along so the length
-    # filter can run during pair generation, before dropDuplicates
-    # ever sees the pruned rows.
-    banded = _band_table(sp, bands, rows_per_band, extra=("n",))
-
-    # Candidate generation by BUCKET GROUPING, not a band-table
-    # self-join (§2.3/§2.4): group the band table once by
-    # (band, band_hash), collect each bucket's (id, n) members sorted
-    # by id, and stream every within-bucket pair out of two Generates.
-    # The self-join form read the 6 M-row (at sf10u) band table twice
-    # and — because the checkpoint's frozen estimate undercuts the
-    # 64 MB auto threshold at EVERY scale — static-broadcast one full
-    # copy of it (a serial driver-side HashedRelation build that dies
-    # first at 100 TB: the interval-overlap estimate-blind class).
-    # The grouped form's only exchange carries the same (id, n) rows
-    # exactly once, partially collected map-side; pair expansion is
-    # streamed (never materialized per bucket beyond the member list,
-    # which the join form also buffered per key). array_sort makes
-    # the bucket order deterministic and gives id_a < id_b for free.
-    #
-    # The lossless size filter stays (J(A,B) <= min/max of set sizes —
-    # the PPJoin length filter): size-mismatched pairs drop before
-    # they cost dedup or verify work. The 5e-5 slack mirrors the
-    # round(jaccard, 4) in the final filter (a true J of t - 0.00004
-    # still rounds up to t). At sf10u this cuts 14.6 M candidates to
-    # 9.4 M with zero extra work.
-    # The aggregate's own exchange is left to AQE: at sf10u its ~28
-    # B/row input coalesces to a handful of tasks and pair generation
-    # still measured no slower than a pinned-width variant (a
-    # repartition(n_parts, band, band_hash) before the groupBy was
-    # tried and REVERTED — no gain at sf10u, +14% on the sf0.1 bench
-    # row from three extra tiny-task stages), while at 100 TB the band
-    # table's bytes alone keep the stage wide.
-    buckets = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.array_sort(F.collect_list(F.struct("id", "n"))).alias("__ms"))
-        .filter(F.size("__ms") >= 2)
-        .select("__ms")
-    )
-    cands = (
-        buckets.select(
-            "__ms", F.posexplode("__ms").alias("__i0", "__a")
-        )
-        .filter(F.col("__i0") < F.size("__ms") - 1)
-        .select(
-            F.col("__a.id").alias("id_a"),
-            F.col("__a.n").alias("n_a"),
-            F.explode(
-                F.slice(
-                    "__ms",
-                    F.col("__i0") + F.lit(2),
-                    F.size("__ms") - F.col("__i0") - F.lit(1),
-                )
-            ).alias("__b"),
-        )
-        .select(
-            "id_a",
-            F.col("__b.id").alias("id_b"),
-            "n_a",
-            F.col("__b.n").alias("n_b"),
-        )
-        .filter(
-            F.least("n_a", "n_b").cast("double")
-            >= (jaccard_threshold - 5e-5) * F.greatest("n_a", "n_b")
-        )
-        .select("id_a", "id_b", "n_a", "n_b")
-        .repartition(n_parts, "id_a")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # ONE exchange serves both the pair-dedup and the verify layout:
-    # the explicit repartition runs FIRST, and dropDuplicates' own
-    # ClusteredDistribution on (id_a, id_b) is satisfied by hash
-    # partitioning on the subset id_a — equal pairs always share
-    # id_a — so the aggregate adds no second shuffle. The explicit
-    # count also matters for the verify stage: candidate rows are tiny
-    # in BYTES but each costs an exact intersect in CPU, so AQE's
-    # byte-based coalescing would squeeze them into a few tasks and
-    # run verification nearly single-threaded; a user-specified
-    # repartition is exempt from coalescing.
-
-    # sound intersection upper bound BEFORE any array payload moves:
-    # join the 128-byte packed bucket-count vectors (never the 5 KB
-    # hash arrays) and drop every pair whose bound proves J below the
-    # threshold (see _packed_intersect_ub; NULL packed = uncappable
-    # doc, must verify). The candidate J distribution is bimodal at
-    # sf10u — 9.4 M pairs at J <= 0.4 vs 15 k true pairs at J >= 0.8 —
-    # so at the 0.7 pair-form threshold the bound clears ~99.8% of the
-    # exact-intersect work (verify stage 25.6 s -> 3.5 s). The bound
-    # carries ~0.1-0.15 of additive J slack (per-bucket min picks up
-    # E[min(Poisson, Poisson)] noise from non-shared elements), so at
-    # LOW thresholds it can prove almost nothing and the two 9 M-row
-    # joins are pure overhead — gated off below 0.5 (the clusters
-    # query verifies at 0.2, where ~60% of candidates genuinely pass
-    # and must be exactly intersected anyway). Join strategy gated on
-    # the MEASURED distinct count (_sized): the packed table scales
-    # with distinct text and descends from a checkpoint whose
-    # frozen-tiny size estimate would otherwise force a static
-    # broadcast at every scale (the operators/winnow.py sf10u
-    # maxResultSize trap) — broadcast is chosen only where the
-    # measured count proves it fits.
-    if jaccard_threshold >= 0.5:
-        pk = sp.select("id", "packed")
-        cands = (
-            cands.join(
-                _sized(
-                    pk.select(
-                        F.col("id").alias("id_a"), F.col("packed").alias("pk_a")
-                    ),
-                    prof_d,
-                    _BROADCAST_MAX_ROWS_PACKED,
-                ),
-                "id_a",
-            )
-            .join(
-                _sized(
-                    pk.select(
-                        F.col("id").alias("id_b"), F.col("packed").alias("pk_b")
-                    ),
-                    prof_d,
-                    _BROADCAST_MAX_ROWS_PACKED,
-                ),
-                "id_b",
-            )
-        )
-        ub = _packed_intersect_ub(F.col("pk_a"), F.col("pk_b"))
-        cands = cands.filter(
-            F.col("pk_a").isNull()
-            | F.col("pk_b").isNull()
-            | (
-                ub.cast("double")
-                >= (jaccard_threshold - 5e-5)
-                * (F.col("n_a") + F.col("n_b") - ub)
-            )
-        ).select("id_a", "id_b", "n_a", "n_b")
-    # Array-attach joins, strategy gated on the measured distinct
-    # count: below the budget the (provably small) array table is
-    # explicitly broadcast — the same plan the static planner picked,
-    # now justified by a measurement instead of a frozen checkpoint
-    # estimate. Above it, shuffle_hash: the array side is hashed per
-    # partition (d * ~1.3 KB / parts, a few MB) and the pair side
-    # streams WITHOUT the sort a merge join would impose on millions
-    # of array-carrying rows. At sf10u the static plan used to build
-    # TWO ~450 MB broadcasts of this table (driver-serial, and the
-    # first thing to die at 100 TB).
-    ha = _sized(
-        base.select(F.col("id").alias("id_a"), F.col("sh_hashes").alias("h_a")),
-        prof_d,
-        _BROADCAST_MAX_ROWS_ARRAY,
-        big="shuffle_hash",
-    )
-    hb = _sized(
-        base.select(F.col("id").alias("id_b"), F.col("sh_hashes").alias("h_b")),
-        prof_d,
-        _BROADCAST_MAX_ROWS_ARRAY,
-        big="shuffle_hash",
-    )
-    # local sort of the SKINNY pair table (24 B rows, no exchange)
-    # before the arrays attach: dropDuplicates' hash aggregate emits
-    # id_a in hash-table order, so without this the verify kernel's
-    # one-element sort cache almost never hits; sorted runs make each
-    # left array sort once per ~#partners pairs (the same arrangement
-    # operators/ssjoin.py feeds the shared kernel)
-    verified = (
-        cands.sortWithinPartitions("id_a").join(ha, "id_a").join(hb, "id_b")
-    )
-    # Exact |A ∩ B| via the sort+searchsorted Arrow kernel (see
-    # _intersect_counts_np — ~7x faster per pair than JVM
-    # array_intersect's per-row hash-set build, and at low thresholds
-    # the verify stage is answer-bound: most candidates are TRUE pairs
-    # that must be exactly intersected no matter what). n_a/n_b are
-    # exact set sizes (sh_hashes is distinct by construction), so the
-    # union size is set arithmetic (|A ∪ B| = |A| + |B| − |A ∩ B|) —
-    # never an array_union per pair; the division and round stay
-    # JVM-side so float semantics are unchanged.
-    if use_arrow_verify:
-        counted = verified.select(
-            "id_a", "id_b", "n_a", "n_b", "h_a", "h_b"
-        ).mapInPandas(
-            _intersect_counts_np,
-            StructType(
-                [
-                    verified.schema["id_a"],
-                    verified.schema["id_b"],
-                    verified.schema["n_a"],
-                    verified.schema["n_b"],
-                    StructField("inter", IntegerType()),
-                ]
-            ),
-        )
-    else:
-        # small-candidate branch: stay JVM-side and skip the Python
-        # worker round-trip entirely. Both arrays are distinct, so
-        # size(array_intersect) IS |A ∩ B| — the same integer the
-        # kernel emits (coalesce matches its 0 for a null/empty side).
-        counted = verified.select(
-            "id_a",
-            "id_b",
-            "n_a",
-            "n_b",
-            F.coalesce(
-                F.size(F.array_intersect("h_a", "h_b")), F.lit(0)
-            ).alias("inter"),
-        )
+    # both verify sides), so it is checkpointed: the shingling runs
+    # once per invocation instead of three times. Eagerly, because its
+    # plan holds an exchange (the spread): a lazy checkpoint is
+    # completed by whichever of its consumers' concurrent jobs finishes
+    # first, which drops the lineage, and tasks of a job submitted
+    # before then report that exchange's shuffle-read metrics to
+    # accumulators the driver has already collected (hundreds of
+    # "Failed to update accumulator" errors per five passes, and those
+    # metrics lost). See operators/ssjoin.py for the
+    # persist-vs-localCheckpoint trade.
+    base = src.select(
+        "id", hashed_shingle_set("__t", k).alias("sh_hashes")
+    ).localCheckpoint(eager=True)
+    # the kernel output feeds both the band table and the packed prune
+    # (id + n + 64-long sig + 16-long packed ≈ 700 B per DISTINCT doc)
+    sp = _signatures(base, num_hashes).localCheckpoint(eager=False)
+    banded = _band_table(sp, bands, num_hashes // bands, extra=("n",))
+    cands = _bucket_candidates(banded, jaccard_threshold, n_parts)
+    cands = _packed_prune(cands, sp, d, jaccard_threshold)
+    counted = _verify(cands, base.select("id", F.col("sh_hashes").alias("h")), d)
+    # n_a/n_b are exact set sizes, so the union is set arithmetic
+    # (|A ∪ B| = |A| + |B| − |A ∩ B|), never an array_union per pair
     inter = F.col("inter")
     jaccard = inter.cast("double") / (F.col("n_a") + F.col("n_b") - inter)
     rep_pairs = (
@@ -833,93 +753,82 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
+    shingled = base.filter(F.size("sh_hashes") > 0).select("id")
     if output == "clusters":
-        # sizes is a d-row aggregate over a checkpoint scan — gate its
-        # join the same way as every other frozen-estimate side (the
-        # planner would otherwise static-broadcast it at any scale)
-        sizes = members.groupBy("__th").agg(F.count("*").alias("m"))
-        rep_sz = reps.select(F.col("id").alias("rid"), "__th").join(
-            _sized(sizes, prof_d, _BROADCAST_MAX_ROWS_META), "__th"
-        )
-        # join strategy gated on the measured distinct count (_sized):
-        # rep_sz scales with distinct content and its lineage passes
-        # through an aggregate whose frozen-tiny size estimate would
-        # otherwise force a static broadcast at any scale (the
-        # operators/winnow.py sf10u maxResultSize trap); below the
-        # metadata byte budget the broadcast is measured-safe and
-        # skips two shuffles of the verified-pair table
-        cross_cl = (
-            rep_pairs.join(
-                _sized(
-                    rep_sz.select(
-                        F.col("rid").alias("id_a"), F.col("m").alias("members_a")
-                    ),
-                    prof_d,
-                    _BROADCAST_MAX_ROWS_META,
-                ),
-                "id_a",
-            )
-            .join(
-                _sized(
-                    rep_sz.select(
-                        F.col("rid").alias("id_b"), F.col("m").alias("members_b")
-                    ),
-                    prof_d,
-                    _BROADCAST_MAX_ROWS_META,
-                ),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                "jaccard",
-                "members_a",
-                "members_b",
-                (F.col("members_a") * F.col("members_b"))
-                .cast("bigint")
-                .alias("n_member_pairs"),
-            )
-        )
-        # exact-dup clusters as self-rows — only shingleable texts,
-        # matching the pair form's exclusion of empty-shingle twins
-        intra_cl = (
-            rep_sz.join(
-                _sized(
-                    base.filter(F.size("sh_hashes") > 0).select("id"),
-                    prof_d,
-                    _BROADCAST_MAX_ROWS_META,
-                ),
-                F.col("rid") == F.col("id"),
-                "left_semi",
-            )
-            .filter(F.col("m") >= 2)
-            .select(
-                F.col("rid").alias("id_a"),
-                F.col("rid").alias("id_b"),
-                F.lit(1.0).alias("jaccard"),
-                F.col("m").alias("members_a"),
-                F.col("m").alias("members_b"),
-                (F.col("m") * (F.col("m") - 1) / 2)
-                .cast("bigint")
-                .alias("n_member_pairs"),
-            )
-        )
-        return cross_cl.unionByName(intra_cl)
-    if not collapse:
+        return _minhash_clusters(rep_pairs, reps, members, d, shingled)
+    if reps is None:
         return rep_pairs
     return _expand_members(
         rep_pairs,
         reps,
         members,
-        prof_n,
-        prof_d,
+        n,
+        d,
         "id_a",
         "id_b",
-        None
-        if jaccard_threshold > 1.0
-        else base.filter(F.size("sh_hashes") > 0).select("id"),
+        None if jaccard_threshold > 1.0 else shingled,
         [F.lit(1.0).alias("jaccard")],
     )
+
+
+def _minhash_clusters(
+    rep_pairs: DataFrame,
+    reps: DataFrame,
+    members: DataFrame,
+    d: int,
+    shingled: DataFrame,
+) -> DataFrame:
+    """Assemble stage of ``minhash_lsh_pairs(output="clusters")``: each
+    verified representative pair gains its clusters' member counts,
+    and every exact-dup cluster of size >= 2 whose text shingles
+    (``shingled``, matching the pair form's exclusion of empty-shingle
+    twins) becomes a self-row at jaccard 1.0. ``reps``/``members`` are
+    :func:`_collapse`'s. The member counts are d-row aggregates whose
+    frozen estimates would static-broadcast them at any scale, so every
+    join is gated on the measured count (:func:`_sized`); below the
+    metadata budget the broadcast skips two shuffles of the pair
+    table."""
+    sizes = members.groupBy("__th").agg(F.count("*").alias("m"))
+    rep_sz = reps.select(F.col("id").alias("rid"), "__th").join(
+        _sized(sizes, d, _BROADCAST_MAX_ROWS_META), "__th"
+    )
+
+    def side(s: str) -> DataFrame:
+        cols = [F.col("rid").alias(f"id_{s}"), F.col("m").alias(f"members_{s}")]
+        return _sized(rep_sz.select(*cols), d, _BROADCAST_MAX_ROWS_META)
+
+    cross = (
+        rep_pairs.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            "jaccard",
+            "members_a",
+            "members_b",
+            (F.col("members_a") * F.col("members_b"))
+            .cast("bigint")
+            .alias("n_member_pairs"),
+        )
+    )
+    m = F.col("m")
+    intra = (
+        rep_sz.join(
+            _sized(shingled, d, _BROADCAST_MAX_ROWS_META),
+            F.col("rid") == F.col("id"),
+            "left_semi",
+        )
+        .filter(m >= 2)
+        .select(
+            F.col("rid").alias("id_a"),
+            F.col("rid").alias("id_b"),
+            F.lit(1.0).alias("jaccard"),
+            m.alias("members_a"),
+            m.alias("members_b"),
+            (m * (m - 1) / 2).cast("bigint").alias("n_member_pairs"),
+        )
+    )
+    return cross.unionByName(intra)
 
 
 # ---------------------------------------------------------------------------
@@ -934,15 +843,14 @@ def _minhash_base(
     num_hashes: int,
     bands: int,
 ):
-    rows_per_band = num_hashes // bands
+    """(base, banded) for the persisted index: the shingle, signature
+    and band stages of :func:`minhash_lsh_pairs`, without its
+    checkpoints."""
     base = docs.select(
         F.col(id_col).alias("id"),
         hashed_shingle_set(text_col, k).alias("sh_hashes"),
     )
-    sigs = base.select(
-        "id", minhash_signature_np(num_hashes)(F.col("sh_hashes")).alias("sig")
-    )
-    return base, _band_table(sigs, bands, rows_per_band)
+    return base, _band_table(_signatures(base, num_hashes), bands, num_hashes // bands)
 
 
 # Persisted-index format version. The band-hash layout is part of the
@@ -1194,13 +1102,13 @@ def minhash_index_probe(
         .select(
             F.col("th").alias("th_c"),
             F.col("sh_hashes").alias("h_c"),
-            F.size(F.array_distinct("sh_hashes")).alias("n_c"),
+            F.size("sh_hashes").alias("n_c"),
         )
     )
     new_hashes = new_base.select(
         F.col("id").alias("th_n"),
         F.col("sh_hashes").alias("h_n"),
-        F.size(F.array_distinct("sh_hashes")).alias("n_n"),
+        F.size("sh_hashes").alias("n_n"),
     )
     inter = F.size(F.array_intersect("h_c", "h_n"))
     jaccard = inter.cast("double") / (F.col("n_c") + F.col("n_n") - inter)

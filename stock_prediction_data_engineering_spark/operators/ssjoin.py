@@ -27,15 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
 
-from .dedup import (
-    _BROADCAST_MAX_ROWS_ARRAY,
-    _dup_profile,
-    _expand_members,
-    _intersect_counts_np,
-    _sized,
-)
+from .dedup import _collapse, _expand_members, _sized, _verify
 
 # d (distinct texts) above which the gram-df and prefix tables stop
 # being broadcast: vocabulary scales ~linearly with distinct text
@@ -120,78 +113,53 @@ def jaccard_similarity_join(
       4. candidate pairs from prefix x prefix on gram — the only
          quadratic-risk join, bounded because prefixes hold only
          globally-rare grams (a gram's posting length is its df rank);
-      5. exact verify bounded by |candidates|: count shared grams per
-         pair, integer cross-multiplied threshold.
+      5. exact verify bounded by |candidates| (the verify stage shared
+         with MinHash-LSH, operators/dedup.py ``_verify``), integer
+         cross-multiplied threshold.
     """
-    # CPU-parallelism guard: the gram explode is per-row compute on a
-    # byte-tiny input (one parquet file = one input split), so without
-    # an explicit repartition the whole tokenize pipeline runs on ONE
-    # core — the same byte-based-sizing trap operators/dedup.py
-    # documents. Measured at sf0.1: 18 s -> ~1 s for the gram scan.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    # Exact-duplicate collapse (operators/dedup.py _dup_profile and
-    # _expand_members): the prefix-filter pipeline runs on ONE
-    # representative per distinct text; cross-cluster pairs inherit the
-    # representatives' exact (inter, union), intra-cluster pairs are
-    # inter = union = n with jac_bp = 10000, only for clusters with a
-    # non-empty gram set (gram-less docs never enter the prefix index
-    # uncollapsed, so their twins must not pair here either).
-    src = docs.repartition(par, id_col)
-    members = src.select(
-        F.col(id_col).alias("id"),
-        F.md5(F.col(text_col).cast("string")).alias("__th"),
-    ).localCheckpoint(eager=False)
-    prof_n, prof_d, collapse = _dup_profile(members, "__th")
-    if collapse:
-        reps = members.groupBy("__th").agg(F.min("id").alias("id"))
-        src = src.join(
-            reps.select(F.col("id").alias("__rep_id")),
-            F.col(id_col) == F.col("__rep_id"),
-            "left_semi",
+    # Exact-duplicate collapse (operators/dedup.py _collapse,
+    # _expand_members): cross-cluster pairs inherit the representatives'
+    # exact (inter, union); intra-cluster pairs are inter = union = n,
+    # jac_bp = 10000, only for clusters with a non-empty gram set
+    # (gram-less docs never enter the prefix index uncollapsed).
+    members, prof_n, prof_d, reps, src = _collapse(docs, id_col, text_col)
+    if reps is None:
+        # CPU-parallelism guard: one byte-tiny parquet file is one
+        # input split, which would run the whole tokenize on ONE core
+        # (sf0.1 gram scan: 18 s -> ~1 s)
+        par = docs.sparkSession.sparkContext.defaultParallelism
+        src = docs.repartition(par, id_col).select(
+            F.col(id_col).alias("id"), F.col(text_col).alias("__t")
         )
     arrs = (
-        src.select(
-            F.col(id_col).alias("id"),
-            word_ngrams(text_col, ngram).alias("arr"),
-        )
+        src.select("id", word_ngrams("__t", ngram).alias("arr"))
         .withColumn("n", F.size("arr"))
         # per-gram xxhash64, computed ONCE inside the checkpoint: the
         # verify stage counts intersections over these int64 sets
-        # instead of the string arrays (strings hash per-pair in the
-        # old array_intersect verify; ints ride the shared numpy
-        # kernel). Distinct strings map to distinct hashes with
-        # P[any collision across the vocabulary] <= |V|^2 / 2^65
-        # (~1e-9 at 1e5-gram vocabularies); if |V| ever approaches
-        # 2^30, swap to dense gram ids assigned off the df table.
+        # instead of the string arrays. Distinct strings map to
+        # distinct hashes with P[any collision across the vocabulary]
+        # <= |V|^2 / 2^65 (~1e-9 at 1e5-gram vocabularies); if |V| ever
+        # approaches 2^30, swap to dense gram ids assigned off the df
+        # table.
         .withColumn("harr", F.transform("arr", lambda g: F.xxhash64(g)))
     )
     # The tokenized table feeds FOUR consumers (df counts, prefix
-    # ranking, and both verify sides). Without materialization the
-    # tokenize — the single most expensive stage — re-executes once
-    # per consumer. A lazy localCheckpoint computes it exactly once
-    # per invocation and truncates lineage; unlike persist() it is
-    # not plan-cache matched across invocations (each call gets a
-    # fresh RDD), so repeated runs re-pay the tokenize honestly.
-    # Measured at sf0.1 (5 k docs): warm 8.3-10.6 s -> 2.2-2.8 s.
-    # Cluster note: localCheckpoint stores unreplicated executor-
-    # local blocks — an executor loss fails the job instead of
-    # recomputing lineage. For a deterministic batch dedup pass
-    # that is the standard time/fault-tolerance trade; flip to
-    # persist(MEMORY_AND_DISK) + explicit unpersist if running
-    # under preemptible executors.
-    arrs = arrs.localCheckpoint(eager=False)
+    # ranking, both verify sides): a localCheckpoint computes the
+    # tokenize, the most expensive stage, once per invocation (sf0.1
+    # warm 8.3-10.6 s -> 2.2-2.8 s); unlike persist() it is not
+    # plan-cache matched across invocations, so repeated runs re-pay
+    # it honestly. Its blocks are unreplicated executor-local: an
+    # executor loss fails the job (use persist(MEMORY_AND_DISK) under
+    # preemptible executors). Eager because its plan holds an exchange
+    # (see the shingle table in operators/dedup.py minhash_lsh_pairs).
+    arrs = arrs.localCheckpoint(eager=True)
 
     grams = arrs.select("id", "n", F.explode("arr").alias("gram"))
     dfreq = grams.groupBy("gram").agg(F.count("*").alias("df"))
 
     ranked = grams.join(
         _sized(dfreq, prof_d, _SSJ_BROADCAST_MAX_D_VOCAB), "gram"
-    ).withColumn(
-        "rnk",
-        F.row_number().over(
-            Window.partitionBy("id").orderBy("df", "gram")
-        ),
-    )
+    ).withColumn("rnk", F.row_number().over(Window.partitionBy("id").orderBy("df", "gram")))
     # prefix length = n - ceil(t*n) + 1, all integer:
     # ceil(a*n/b) = (a*n + b - 1) div b
     pref = (
@@ -206,26 +174,18 @@ def jaccard_similarity_join(
         .select("id", "gram", "n", "rnk")
     )
 
-    # candidate join carries the PPJoin length + position filters:
-    # J >= t forces t*na <= nb <= na/t (size-mismatched pairs never
-    # leave the join), and a pair seen at prefix positions (pa, pb)
-    # can overlap at most 1 + min(na-pa, nb-pb) grams, which must
-    # reach the required overlap ceil(t/(1+t)*(na+nb)) — both checks
-    # integer cross-multiplied, no float
-    # candidate self-join: gate the build side the same way — the
-    # prefix table scales with corpus grams, and the static planner
-    # broadcast one full copy of it at 377 k docs off the checkpoint's
-    # frozen estimate
+    # candidate self-join with the PPJoin length + position filters:
+    # J >= t forces t*na <= nb <= na/t, and a pair seen at prefix
+    # positions (pa, pb) can overlap at most 1 + min(na-pa, nb-pb)
+    # grams, which must reach ceil(t/(1+t)*(na+nb)); both checks are
+    # integer cross-multiplied. The build side is gated like dfreq:
+    # the static planner broadcast one full prefix copy at 377 k docs
+    # off the checkpoint's frozen estimate.
     pref = _sized(pref, prof_d, _SSJ_BROADCAST_MAX_D_VOCAB)
     a = pref.alias("a")
     b = pref.alias("b")
     nsum = F.col("a.n") + F.col("b.n")
-    ubound = (
-        F.least(
-            F.col("a.n") - F.col("a.rnk"), F.col("b.n") - F.col("b.rnk")
-        )
-        + 1
-    )
+    ubound = F.least(F.col("a.n") - F.col("a.rnk"), F.col("b.n") - F.col("b.rnk")) + 1
     cand = (
         a.join(
             b,
@@ -238,66 +198,18 @@ def jaccard_similarity_join(
                 >= F.lit(threshold_num) * nsum
             ),
         )
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
 
-    # exact verify, candidate-bounded: count shared grams per pair
-    # over the hashed int64 gram sets via the shared sort+searchsorted
-    # Arrow kernel (operators/dedup.py _intersect_counts_np — measured
-    # ~7x cheaper per pair than a per-row JVM hash-set build, and far
-    # cheaper again than hashing STRINGS per pair) instead of
-    # exploding candidates x grams back into a row join. The two keyed
-    # joins spread pairs across shuffle partitions; no extra
-    # repartition, because the array payloads make any additional
-    # exchange the dominant cost (measured: a post-join pair
-    # repartition was pure overhead).
-    # verify array attaches: measured gate (broadcast to ~0.5 GB of
-    # gram-hash arrays — the sf10u-winning plan — merge beyond)
-    va = _sized(
-        arrs.select(
-            F.col("id").alias("id_a"), F.col("harr").alias("h_a"), F.col("n").alias("n_a")
-        ),
-        prof_d,
-        _BROADCAST_MAX_ROWS_ARRAY,
-    )
-    vb = _sized(
-        arrs.select(
-            F.col("id").alias("id_b"), F.col("harr").alias("h_b"), F.col("n").alias("n_b")
-        ),
-        prof_d,
-        _BROADCAST_MAX_ROWS_ARRAY,
-    )
-    paired = (
-        cand.select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"))
-        .join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", "n_a", "n_b", "h_a", "h_b")
-        # local sort, no exchange: the join leaves rows ordered by
-        # id_b, so the kernel's one-element id_a sort cache would
-        # almost never hit; sorting within partitions restores id_a
-        # runs so each left array is sorted once per run, not per pair
-        .sortWithinPartitions("id_a")
-    )
-    counted = paired.mapInPandas(
-        _intersect_counts_np,
-        StructType(
-            [
-                paired.schema["id_a"],
-                paired.schema["id_b"],
-                paired.schema["n_a"],
-                paired.schema["n_b"],
-                StructField("inter", IntegerType()),
-            ]
-        ),
-    )
+    # exact verify over the hashed gram sets (operators/dedup.py)
+    counted = _verify(cand, arrs.select("id", F.col("harr").alias("h"), "n"), prof_d)
+    union = F.col("n_a") + F.col("n_b") - F.col("inter")
     verified = counted.select(
         F.col("id_a").alias("doc_a"),
         F.col("id_b").alias("doc_b"),
         F.col("inter").cast("bigint").alias("inter_grams"),
-        (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("bigint").alias(
-            "union_grams"
-        ),
+        union.cast("bigint").alias("union_grams"),
     )
     rep_pairs = verified.filter(
         F.col("inter_grams") * threshold_den
@@ -309,22 +221,13 @@ def jaccard_similarity_join(
         "union_grams",
         F.expr("(inter_grams * 10000) div union_grams").alias("jac_bp"),
     )
-    if not collapse:
+    if reps is None:
         return rep_pairs
+    eligible = arrs.filter(F.col("n") > 0).select("id", "n")
+    x_n = F.col("x.n").cast("bigint")
     return _expand_members(
-        rep_pairs,
-        reps,
-        members,
-        prof_n,
-        prof_d,
-        "doc_a",
-        "doc_b",
-        None
-        if threshold_num > threshold_den
-        else arrs.filter(F.col("n") > 0).select("id", "n"),
-        [
-            F.col("x.n").cast("bigint").alias("inter_grams"),
-            F.col("x.n").cast("bigint").alias("union_grams"),
-            F.lit(10000).cast("bigint").alias("jac_bp"),
-        ],
+        rep_pairs, reps, members, prof_n, prof_d, "doc_a", "doc_b",
+        None if threshold_num > threshold_den else eligible,
+        [x_n.alias("inter_grams"), x_n.alias("union_grams"),
+         F.lit(10000).cast("bigint").alias("jac_bp")],
     )

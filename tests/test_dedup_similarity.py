@@ -41,18 +41,12 @@ def test_minhash_lsh_finds_planted_near_dups(planted_docs):
     assert not any(3 in p or 5 in p for p in pairs)
 
 
-def test_minhash_verify_branches_bit_identical(spark, monkeypatch):
-    """The adaptive verify gate (operators/dedup.py
-    _VERIFY_KERNEL_MIN_DISTINCT) picks JVM array_intersect below the
-    candidate-volume crossover and the Arrow sort+searchsorted kernel
-    above it. Both branches must produce BIT-IDENTICAL answers — same
-    pairs, same rounded jaccard — in both output forms, on a corpus
-    with exact dups, near dups, unrelated docs, and a too-short text
-    (empty shingle set exercises the null/empty intersect edge). Each
-    branch is forced by moving the gate: 0 (every corpus takes the
-    Arrow kernel) or above the fixture's distinct-text count (JVM)."""
-    from stock_prediction_data_engineering_spark.operators import dedup
-
+def _verify_fixture(spark):
+    """Exact dups, a near dup, two too-short twins (empty shingle and
+    gram sets exercise the null/empty intersect edge) and 20 unrelated
+    rows sharing a boilerplate suffix (word-3-gram Jaccard 7/19 between
+    any two of them): 25 docs, 23 distinct texts, so the exact-dup
+    collapse engages."""
     base = (
         "the quick brown fox jumps over the lazy dog while the cat "
         "watches from the warm window sill and the birds sing in the "
@@ -65,21 +59,77 @@ def test_minhash_verify_branches_bit_identical(spark, monkeypatch):
                  f"with shared boilerplate suffix common to all rows")
         for i in range(20)
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    return spark.createDataFrame(rows, "doc_id long, text string"), len(rows)
 
-    gates = {"jvm": len(rows) + 1, "arrow": 0}
-    for output in ("pairs", "clusters"):
+
+def _verify_operators():
+    """Both callers of the shared verify stage (operators/dedup.py
+    _verify), each in every output form, at thresholds that send many
+    candidates through the exact intersect."""
+    from stock_prediction_data_engineering_spark.operators import dedup
+    from stock_prediction_data_engineering_spark.operators.ssjoin import (
+        jaccard_similarity_join,
+    )
+
+    return {
+        "minhash_pairs": lambda d: dedup.minhash_lsh_pairs(d, jaccard_threshold=0.2),
+        "minhash_clusters": lambda d: dedup.minhash_lsh_pairs(
+            d, jaccard_threshold=0.2, output="clusters"
+        ),
+        "ssjoin": lambda d: jaccard_similarity_join(d, threshold_num=1, threshold_den=3),
+    }
+
+
+def test_minhash_verify_branches_bit_identical(spark, monkeypatch):
+    """The adaptive verify gate (operators/dedup.py
+    _VERIFY_KERNEL_MIN_DISTINCT, read only by the shared _verify stage)
+    picks JVM array_intersect below the candidate-volume crossover and
+    the Arrow sort+searchsorted kernel above it. Both branches must
+    produce BIT-IDENTICAL answers for both operators that call it —
+    MinHash-LSH in both output forms and the exact similarity join.
+    Each branch is forced by moving the gate: 0 (every corpus takes the
+    Arrow kernel) or above the fixture's distinct-text count (JVM)."""
+    from stock_prediction_data_engineering_spark.operators import dedup
+
+    docs, n_rows = _verify_fixture(spark)
+    gates = {"jvm": n_rows + 1, "arrow": 0}
+    for name, op in _verify_operators().items():
         got = {}
         for kern, gate in gates.items():
             monkeypatch.setattr(dedup, "_VERIFY_KERNEL_MIN_DISTINCT", gate)
-            df = dedup.minhash_lsh_pairs(
-                docs, jaccard_threshold=0.2, output=output
-            )
+            df = op(docs)
             plan = df._jdf.queryExecution().executedPlan().toString()
-            assert ("MapInPandas" in plan) == (kern == "arrow"), (kern, output)
+            assert ("MapInPandas" in plan) == (kern == "arrow"), (kern, name)
             got[kern] = sorted(tuple(r) for r in df.collect())
-        assert got["jvm"] == got["arrow"], f"branch mismatch for {output}"
+        assert got["jvm"] == got["arrow"], f"branch mismatch for {name}"
         assert len(got["jvm"]) > 0  # the comparison is not vacuous
+
+
+def test_verify_above_broadcast_budget_keeps_id_a_runs(spark, monkeypatch):
+    """Above the array broadcast budget the verify stage attaches the
+    arrays with shuffle_hash joins; the second one re-exchanges the
+    pair stream by id_b, so the stage sorts on id_a after the last
+    attach to give the Arrow kernel its id_a runs. With both gates at 0
+    every operator takes that regime: its answers equal the default
+    (broadcast) regime's, and the executed plan has a Sort on id_a
+    between the last join and MapInPandas."""
+    from stock_prediction_data_engineering_spark.operators import dedup
+
+    docs, _ = _verify_fixture(spark)
+    ops = {k: v for k, v in _verify_operators().items() if k != "minhash_clusters"}
+    want = {name: sorted(tuple(r) for r in op(docs).collect()) for name, op in ops.items()}
+    monkeypatch.setattr(dedup, "_BROADCAST_MAX_ROWS_ARRAY", 0)
+    monkeypatch.setattr(dedup, "_VERIFY_KERNEL_MIN_DISTINCT", 0)
+    for name, op in ops.items():
+        df = op(docs)
+        assert sorted(tuple(r) for r in df.collect()) == want[name], name
+        lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+        at = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
+        below = lines[at + 1 :]
+        join = next(i for i, line in enumerate(below) if "Join" in line)
+        assert "ShuffledHashJoin" in below[join], (name, below[join])
+        sorts = [line for line in below[:join] if "Sort [id_a" in line]
+        assert sorts, (name, below[: join + 1])
 
 
 def test_collapse_helpers_verdict_and_member_expansion(spark):
@@ -144,18 +194,20 @@ def test_collapse_helpers_verdict_and_member_expansion(spark):
 
 
 def test_minhash_bucket_candidates_match_self_join(spark):
-    """Round-11 candidate-stage rewrite: pair generation by grouping
-    each (band, band_hash) bucket and streaming within-bucket pairs
-    must produce EXACTLY the candidate set of the old band-table
-    self-join (id_a < id_b, same length filter). The reference
-    self-join is reconstructed inline from the same module internals
-    over a corpus with exact dups, near dups, and unrelated rows."""
+    """The MinHash candidate stage (operators/dedup.py
+    _bucket_candidates: pair generation by grouping each
+    (band, band_hash) bucket and streaming within-bucket pairs) must
+    produce EXACTLY the candidate set of a band-table self-join
+    (id_a < id_b, same length filter), reconstructed here as the
+    reference over a corpus with exact dups, near dups, and unrelated
+    rows."""
     from pyspark.sql import functions as F
 
     from stock_prediction_data_engineering_spark.operators.dedup import (
         _band_table,
+        _bucket_candidates,
+        _signatures,
         hashed_shingle_set,
-        minhash_signature_packed_np,
     )
 
     base = (
@@ -171,19 +223,12 @@ def test_minhash_bucket_candidates_match_self_join(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     thr = 0.2
-    sp = (
-        docs.select(
-            F.col("doc_id").alias("id"),
-            F.size(hashed_shingle_set("text", 5)).alias("n"),
-            minhash_signature_packed_np(64)(
-                hashed_shingle_set("text", 5)
-            ).alias("sp"),
-        )
-        .select("id", "n", F.col("sp.sig").alias("sig"))
+    shingled = docs.select(
+        F.col("doc_id").alias("id"), hashed_shingle_set("text", 5).alias("sh_hashes")
     )
-    banded = _band_table(sp, 16, 4, extra=("n",)).localCheckpoint()
+    banded = _band_table(_signatures(shingled, 64), 16, 4, extra=("n",)).localCheckpoint()
 
-    # reference: the pre-round-11 self-join form
+    # reference: the band-table self-join form
     left, right = banded.alias("l"), banded.alias("r")
     ref = (
         left.join(
@@ -199,36 +244,7 @@ def test_minhash_bucket_candidates_match_self_join(spark):
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-
-    # round-11 form: bucket grouping + streamed pair explode
-    buckets = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.array_sort(F.collect_list(F.struct("id", "n"))).alias("__ms"))
-        .filter(F.size("__ms") >= 2)
-        .select("__ms")
-    )
-    got = (
-        buckets.select("__ms", F.posexplode("__ms").alias("__i0", "__a"))
-        .filter(F.col("__i0") < F.size("__ms") - 1)
-        .select(
-            F.col("__a.id").alias("id_a"),
-            F.col("__a.n").alias("n_a"),
-            F.explode(
-                F.slice(
-                    "__ms",
-                    F.col("__i0") + F.lit(2),
-                    F.size("__ms") - F.col("__i0") - F.lit(1),
-                )
-            ).alias("__b"),
-        )
-        .select("id_a", F.col("__b.id").alias("id_b"), "n_a", F.col("__b.n").alias("n_b"))
-        .filter(
-            F.least("n_a", "n_b").cast("double")
-            >= (thr - 5e-5) * F.greatest("n_a", "n_b")
-        )
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    got = _bucket_candidates(banded, thr, 4).select("id_a", "id_b")
     ref_set = sorted(tuple(r) for r in ref.collect())
     got_set = sorted(tuple(r) for r in got.collect())
     assert ref_set == got_set

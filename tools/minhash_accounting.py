@@ -19,8 +19,10 @@ Prints one JSON line per sf_dir:
      "member_pairs_emitted": M, "cluster_rows": K,
      "pairs_sec": t1, "clusters_sec": t2}
 
-Stage counts reuse the operator's own helpers (_minhash_base with the
-same k=5/64/16 parameters as q_dedup_minhash) so the accounting can't
+Stage counts call the operator's own signature and candidate stages
+(operators/dedup.py _signatures, _band_table, _bucket_candidates, with
+q_dedup_minhash's k=5, 64 hashes, 16 bands and threshold 0.2, whose
+length filter is part of the candidate stage) so the accounting can't
 drift from the measured pipeline.
 """
 
@@ -38,7 +40,10 @@ from pyspark.sql import functions as F
 
 def account(spark, sf_dir: str) -> dict:
     from stock_prediction_data_engineering_spark.operators.dedup import (
-        _minhash_base,
+        _band_table,
+        _bucket_candidates,
+        _signatures,
+        hashed_shingle_set,
         minhash_lsh_pairs,
     )
 
@@ -47,21 +52,13 @@ def account(spark, sf_dir: str) -> dict:
     reps = docs.dropDuplicates(["text"])
     n_distinct = reps.count()
 
-    # candidate stage at rep grain: same banding as the operator
-    _, banded = _minhash_base(reps, "text", "doc_id", 5, 64, 16)
-    banded = banded.localCheckpoint(eager=False)
-    cands = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .count()
+    # candidate stage at rep grain: the operator's own stages
+    base = reps.select(
+        F.col("doc_id").alias("id"), hashed_shingle_set("text", 5).alias("sh_hashes")
     )
+    banded = _band_table(_signatures(base, 64), 16, 4, extra=("n",))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    cands = _bucket_candidates(banded, 0.2, n_parts).count()
     # verified distinct-text pairs at the bench threshold
     verified = minhash_lsh_pairs(reps, jaccard_threshold=0.2).count()
 

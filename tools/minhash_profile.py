@@ -1,7 +1,8 @@
 """Ad-hoc stage profile for minhash_lsh_pairs at a given fixture:
-times (1) shingle+signature materialization, (2) band table, (3)
-candidate generation, (4) verify+cluster assembly, by materializing
-successive prefixes of the same pipeline. Diagnostic only.
+times (1) exact-dup collapse + shingling, (2) signatures, (3) band
+table, (4) candidates (bucket grouping + packed-bound prune), (5)
+exact verify + threshold, by materializing each of the operator's own
+stages (operators/dedup.py) in turn. Diagnostic only.
 
 Usage: python tools/minhash_profile.py [.data/sf10u] [threshold]
 """
@@ -28,33 +29,15 @@ def main() -> None:
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     t0 = time.time()
-    d = dedup._spread(docs)
-    members = d.select(
-        F.col("doc_id").alias("id"), F.md5(F.col("text").cast("string")).alias("__th")
-    )
-    reps = members.groupBy("__th").agg(F.min("id").alias("id"))
-    d2 = d.join(
-        reps.select(F.col("id").alias("__rep_id")),
-        F.col("doc_id") == F.col("__rep_id"),
-        "left_semi",
-    )
-    base = d2.select(
-        F.col("doc_id").alias("id"),
-        dedup.hashed_shingle_set("text", 5).alias("sh_hashes"),
+    _, _, d, _, src = dedup._collapse(docs, "doc_id", "text", profile=False)
+    base = src.select(
+        "id", dedup.hashed_shingle_set("__t", 5).alias("sh_hashes")
     ).localCheckpoint(eager=False)
-    n_base = base.count()
+    base.count()
     t1 = time.time()
-    print(f"collapse+shingle: {t1-t0:.1f}s  reps={n_base}")
+    print(f"collapse+shingle: {t1-t0:.1f}s  reps={d}")
 
-    sp = (
-        base.select(
-            "id",
-            F.size("sh_hashes").alias("n"),
-            dedup.minhash_signature_packed_np(64)(F.col("sh_hashes")).alias("sp"),
-        )
-        .select("id", "n", F.col("sp.sig").alias("sig"), F.col("sp.packed").alias("packed"))
-        .localCheckpoint(eager=False)
-    )
+    sp = dedup._signatures(base, 64).localCheckpoint(eager=False)
     sp.count()
     t2 = time.time()
     print(f"signatures:       {t2-t1:.1f}s")
@@ -64,43 +47,17 @@ def main() -> None:
     t3 = time.time()
     print(f"band table:       {t3-t2:.1f}s")
 
-    left, right = banded.alias("l"), banded.alias("r")
-    cands = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.id") < F.col("r.id"))
-            & (
-                F.least("l.n", "r.n").cast("double")
-                >= (thr - 5e-5) * F.greatest("l.n", "r.n")
-            ),
-        )
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.col("l.n").alias("n_a"),
-            F.col("r.n").alias("n_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .repartition(n_parts, "id_a")
-        .localCheckpoint(eager=False)
-    )
+    cands = dedup._packed_prune(
+        dedup._bucket_candidates(banded, thr, n_parts), sp, d, thr
+    ).localCheckpoint(eager=False)
     n_c = cands.count()
     t4 = time.time()
     print(f"candidates:       {t4-t3:.1f}s  n={n_c}")
 
-    ha = base.select(F.col("id").alias("id_a"), F.col("sh_hashes").alias("h_a"))
-    hb = base.select(F.col("id").alias("id_b"), F.col("sh_hashes").alias("h_b"))
-    verified = cands.join(ha, "id_a").join(hb, "id_b")
-    inter = F.size(F.array_intersect("h_a", "h_b"))
+    counted = dedup._verify(cands, base.select("id", F.col("sh_hashes").alias("h")), d)
+    inter = F.col("inter")
     jacc = inter.cast("double") / (F.col("n_a") + F.col("n_b") - inter)
-    rep_pairs = (
-        verified.withColumn("jaccard", F.round(jacc, 4))
-        .filter(F.col("jaccard") >= thr)
-        .select("id_a", "id_b", "jaccard")
-    )
-    n_p = rep_pairs.count()
+    n_p = counted.filter(F.round(jacc, 4) >= thr).count()
     t5 = time.time()
     print(f"verify:           {t5-t4:.1f}s  pairs={n_p}")
     print(f"TOTAL(prefix sum) {t5-t0:.1f}s")

@@ -3,8 +3,9 @@ O(n²) DuckDB oracle cannot run (SWEEP_r9_sf10u: ABORTED at 377 k
 distinct texts — the oracle, not the operator, is the bottleneck).
 
 Protocol (the round-9 verdict's superset check): an INDEPENDENT
-candidate path — MinHash-LSH banding over the SAME word-3-gram sets —
-followed by the SAME exact integer verify produces pairs with exact
+candidate path — MinHash-LSH banding over the SAME word-3-gram sets,
+through MinHash's own signature and candidate stages — followed by the
+SAME exact verify stage (operators/dedup.py _verify) produces pairs with exact
 (inter_grams, union_grams, jac_bp) on the same xxhash64'd gram sets.
 MinHash banding has false negatives (band misses) but ZERO false
 positives after exact verification, so against the PPJoin prefix-
@@ -15,14 +16,16 @@ filter output (operators/ssjoin.py, which claims NO false negatives):
       the prefix/length/position filters);
   (2) on shared pairs, (inter_grams, union_grams, jac_bp) must be
       bit-identical (both sides are integer arithmetic over the same
-      hashed gram sets — any drift is a verify bug on one side);
+      hashed gram sets);
   (3) coverage = |crosscheck| / |ppjoin| is reported as the cross-
       checker's recall (informative: band-miss rate, not a gate).
 
-The two candidate generators share only the tokenizer and the gram
-hash — which is exactly the part the sf1u brute-force oracle already
-value-checks — and disagree on everything the large-scale run is
-meant to exercise (candidate pruning, join strategy, verify routing).
+The two sides share the tokenizer and the gram hash — exactly the
+part the sf1u brute-force oracle already value-checks — and the verify
+stage, whose two intersect branches are pinned bit-identical by
+tests/test_dedup_similarity.py. They disagree on candidate generation
+(prefix/length/position filters vs LSH bands), which is what the
+large-scale run is meant to exercise.
 
 Usage:
     python tools/ssjoin_crosscheck.py [--sf-dir .data/sf10u]
@@ -53,13 +56,13 @@ def main() -> int:
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
-    from pyspark.sql.types import IntegerType, StructField, StructType
 
     from stock_prediction_data_engineering_spark.catalog import table
     from stock_prediction_data_engineering_spark.operators.dedup import (
         _band_table,
-        _intersect_counts_np,
-        minhash_signature_np,
+        _bucket_candidates,
+        _signatures,
+        _verify,
         shingle_hashes,
     )
     from stock_prediction_data_engineering_spark.operators.ssjoin import (
@@ -83,10 +86,9 @@ def main() -> int:
     print(f"[xcheck] ppjoin pairs={n_pp} in {t_pp}s", file=sys.stderr)
 
     # --- side B: independent MinHash-banded candidates over the SAME
-    # gram sets, same exact integer verify ---
+    # gram sets, through the operator's own exact verify stage ---
     t0 = time.time()
     par = spark.sparkContext.defaultParallelism
-    rows_per_band = args.num_hashes // args.bands
     arrs = (
         docs.repartition(par, "doc_id")
         .select(
@@ -98,54 +100,22 @@ def main() -> int:
         # the same per-gram xxhash64 the PPJoin verify intersects —
         # shared on purpose: the gram definition/hash is already
         # value-checked by the sf1u brute-force oracle
-        .withColumn("harr", F.transform("arr", lambda g: F.xxhash64(g)))
+        .withColumn("h", F.transform("arr", lambda g: F.xxhash64(g)))
         # minhash base hashes over the gram STRINGS (mod 2^31-1),
         # independent of the verify hash above
-        .withColumn("sh", shingle_hashes(F.col("arr")))
+        .withColumn("sh_hashes", shingle_hashes(F.col("arr")))
         .localCheckpoint(eager=False)
     )
-    sigs = arrs.select(
-        "id",
-        minhash_signature_np(args.num_hashes)(F.col("sh")).alias("sig"),
+    d = arrs.count()
+    banded = _band_table(
+        _signatures(arrs, args.num_hashes),
+        args.bands,
+        args.num_hashes // args.bands,
+        extra=("n",),
     )
-    banded = _band_table(sigs, args.bands, rows_per_band)
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "band_hash"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        )
-        .distinct()
-    )
-    va = arrs.select(
-        F.col("id").alias("id_a"),
-        F.col("harr").alias("h_a"),
-        F.col("n").alias("n_a"),
-    )
-    vb = arrs.select(
-        F.col("id").alias("id_b"),
-        F.col("harr").alias("h_b"),
-        F.col("n").alias("n_b"),
-    )
-    paired = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", "n_a", "n_b", "h_a", "h_b")
-        .sortWithinPartitions("id_a")
-    )
-    counted = paired.mapInPandas(
-        _intersect_counts_np,
-        StructType(
-            [
-                paired.schema["id_a"],
-                paired.schema["id_b"],
-                paired.schema["n_a"],
-                paired.schema["n_b"],
-                StructField("inter", IntegerType()),
-            ]
-        ),
-    )
+    # the length filter at J >= 1/2 is lossless, like the PPJoin's own
+    cand = _bucket_candidates(banded, 0.5, par).select("id_a", "id_b")
+    counted = _verify(cand, arrs.select("id", "h", "n"), d)
     mh = (
         counted.select(
             F.col("id_a").alias("doc_a"),
