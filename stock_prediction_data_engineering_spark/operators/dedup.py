@@ -29,7 +29,7 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -59,45 +59,49 @@ _MERSENNE = 2147483647  # 2^31 - 1: keeps a*h+b inside long range
 # d=377 k (sf10u) it wins 12+ s.
 _VERIFY_KERNEL_MIN_DISTINCT = 20_000
 
-# Join-strategy gates for sides whose PLANNER estimate is unusable —
-# checkpoint-frozen (LogicalRDD keeps the pre-checkpoint guess) or
-# aggregate-shrunk — so the static planner would broadcast them at any
-# scale (the interval-overlap / winnow estimate-blind class; at sf10u
-# it static-broadcast the 6 M-row band table and BOTH ~450 MB shingle
-# array tables). The gates key on a MEASURED row count the pipeline
-# already has (the duplication profile / rep-table count), against a
-# row bound derived from the session's 64 MB broadcast budget and the
-# side's per-row width — scale-adaptive, not fixture-tuned:
-# ~1.3 KB/row for shingle-hash arrays (≈300 int32s at the corpus'
-# ~300-char texts), ~150 B/row for the packed bucket vectors,
-# ~50 B/row for id/hash/count metadata. The ARRAY bound (the verify
-# attaches, _verify) is sized from
-# guide §3.1's broadcast guidance (a few hundred MB is fine; the hard
-# cap is 8 GB / 512 M rows): 400 k rows ≈ 0.5 GB — measured at sf10u
-# (377 k distinct): broadcast verify beats the shuffle_hash
-# alternative by >4x wall (the pair table amplifies each array ~39x
-# through the second attach exchange, ~17 GB vs one 0.5 GB
-# broadcast). Above the bound the pipeline degrades gracefully to
-# shuffle joins instead of dying in a driver-side build.
-_BROADCAST_MAX_ROWS_ARRAY = 400_000
-_BROADCAST_MAX_ROWS_PACKED = 400_000
-_BROADCAST_MAX_ROWS_META = 1_300_000
-# segment-dedup decision tables (~70 B/row: md5 + position struct or
-# dropped-position lists): 3 M rows ≈ 200 MB — the measured-good
-# broadcast at sf10u's 2.9 M segments; sort-merge beyond
-_SEG_BROADCAST_MAX_ROWS = 3_000_000
-# inverted-index gram tables (ngram_jaccard): broadcast while the
-# corpus stays under ~50 k docs (x ~45 grams/doc x ~50 B/row ~ 100 MB),
-# sort-merge beyond — mirrors operators/ssjoin.py's vocab gate
-_SSJ_GRAM_BROADCAST_MAX_DOCS = 50_000
+# The one byte budget of every broadcast-vs-shuffle decision in the
+# dedup and curation operators; :func:`_sized` is its only reader and
+# documents how it was chosen.
+_BROADCAST_BUDGET_BYTES = 512 << 20
 
 
-def _sized(df: DataFrame, rows: int, budget: int, big: str = "merge") -> DataFrame:
-    """Pick the join strategy for ``df`` from a measured row count:
-    explicit broadcast under ``budget`` rows (where it provably fits
-    and wins), an explicit shuffle-join hint above it (where a static
-    broadcast off a frozen estimate would OOM/stall at scale)."""
-    return F.broadcast(df) if rows <= budget else df.hint(big)
+def _sized(rows: float, row_bytes: float, big: str = "merge") -> str:
+    """The join-strategy hint for a join side of ``rows`` rows and
+    ``row_bytes`` average row width: ``"broadcast"`` while
+    rows × row_bytes fits _BROADCAST_BUDGET_BYTES, else ``big``
+    (``"merge"``, or ``"shuffle_hash"`` where a merge join would sort
+    millions of array-carrying rows). Call sites pass
+    ``df.hint(_sized(...))`` and only measured numbers.
+
+    Why a gate at all: every gated side descends from a checkpoint (a
+    LogicalRDD keeps the pre-checkpoint guess) or an aggregate the
+    planner guesses tiny, so the static planner would broadcast it at
+    any scale (at sf10u it static-broadcast the 6 M-row band table,
+    both shingle-array tables, the 16 M-row gram-df table and
+    one full prefix side), and AQE only promotes joins to broadcast,
+    never demotes one. Above the budget the pipeline degrades to
+    shuffle joins instead of failing in a driver-side build.
+
+    ``rows`` is the side's own measured row count or a measured upper
+    bound on it; a gram-keyed side counts grams, not documents.
+    ``row_bytes`` follows Spark's row layout: a fixed-width column
+    takes its type's width, a string its measured average length plus
+    the 8-byte offset word every string carries (so an md5 hex digest
+    is 40), an array its measured average length times its element
+    width. Each operator measures lengths in a job it already runs
+    (the checkpoint that completes its table, or the count over it),
+    so no gate adds a job, and long documents scale the width instead
+    of silently overrunning a row bound.
+
+    The budget, 512 MiB, follows the broadcast guidance of a few
+    hundred MB (the hard cap is 8 GB / 512 M rows) and sits between
+    two measured sf10u builds. Below it: the MinHash verify attach,
+    377 k distinct shingle arrays of ~204 ints (~297 MiB), which
+    broadcast measured >4x faster than shuffle_hash, because the pair
+    table amplifies each array ~39x through a second attach exchange.
+    Above it: the similarity join's gram-df and prefix sides, 19.7 M
+    gram rows (~591 and ~742 MiB), which stay sort-merge."""
+    return "broadcast" if rows * row_bytes <= _BROADCAST_BUDGET_BYTES else big
 
 
 # ---------------------------------------------------------------------------
@@ -218,16 +222,13 @@ def _expand_members(
       pipeline pairs. ``eligible=None`` emits none (a threshold above
       1 admits no identical pair).
 
-    Join strategies are gated on the measured counts: the (rid, __th)
-    side is d rows and ``members`` n rows, and both descend from
-    checkpoints or aggregates whose frozen estimates would
-    static-broadcast them at any scale; broadcast only where the
-    count fits the metadata budget."""
+    Every (id, md5) side is gated by :func:`_sized`: the (rid, __th)
+    side is d rows and ``members`` n rows, 8 + 40 bytes each."""
     rep_th = reps.select(F.col("id").alias("rid"), "__th")
 
     def side(df: DataFrame, rows: int, *renames: tuple[str, str]) -> DataFrame:
         cols = [F.col(c).alias(to) for c, to in renames]
-        return _sized(df.select(*cols), rows, _BROADCAST_MAX_ROWS_META)
+        return df.select(*cols).hint(_sized(rows, 48))
 
     values = [c for c in rep_pairs.columns if c not in (a, b)]
     cross = (
@@ -245,9 +246,10 @@ def _expand_members(
         return cross
     carried = [c for c in eligible.columns if c != "id"]
     eligible_th = eligible.join(
-        _sized(rep_th, d, _BROADCAST_MAX_ROWS_META), F.col("id") == F.col("rid")
+        rep_th.hint(_sized(d, 48)), F.col("id") == F.col("rid")
     ).select("__th", *carried)
-    eligible_th = _sized(eligible_th, d, _BROADCAST_MAX_ROWS_META)
+    # the carried value columns are fixed-width, at most 8 bytes each
+    eligible_th = eligible_th.hint(_sized(d, 40 + 8 * len(carried)))
     # a semi join keeps the planner's estimate of mm at members' own
     # size (an inner join's estimate multiplies both sides and turns
     # the self-join below from a broadcast into a sort-merge join);
@@ -564,7 +566,7 @@ def _bucket_candidates(
 
 
 def _packed_prune(
-    cands: DataFrame, sp: DataFrame, d: int, jaccard_threshold: float
+    cands: DataFrame, sp: DataFrame, rows: int, jaccard_threshold: float
 ) -> DataFrame:
     """Candidate prune of :func:`minhash_lsh_pairs` before any array
     payload moves: attach the 128-byte packed bucket-count vectors of
@@ -579,16 +581,16 @@ def _packed_prune(
     (the per-bucket min picks up noise from non-shared elements), so
     below 0.5 it proves almost nothing and its two joins are pure
     overhead; it runs only from 0.5 (the clusters query verifies at
-    0.2, where ~60% of candidates genuinely pass). The packed table
-    scales with the distinct count ``d`` and descends from a checkpoint
-    whose frozen estimate would static-broadcast it at any scale, so
-    the measured count gates both joins (:func:`_sized`)."""
+    0.2, where ~60% of candidates genuinely pass). ``rows`` is the
+    measured row count of ``sp``; both joins are gated on it
+    (:func:`_sized`)."""
     if jaccard_threshold < 0.5:
         return cands
 
     def side(s: str) -> DataFrame:
         cols = [F.col("id").alias(f"id_{s}"), F.col("packed").alias(f"pk_{s}")]
-        return _sized(sp.select(*cols), d, _BROADCAST_MAX_ROWS_PACKED)
+        # an id and 16 packed longs
+        return sp.select(*cols).hint(_sized(rows, 8 + 8 * 16))
 
     ub = _packed_intersect_ub(F.col("pk_a"), F.col("pk_b"))
     bound = ub.cast("double") >= (jaccard_threshold - 5e-5) * (
@@ -602,7 +604,9 @@ def _packed_prune(
     )
 
 
-def _verify(pairs: DataFrame, arrays: DataFrame, d: int) -> DataFrame:
+def _verify(
+    pairs: DataFrame, arrays: DataFrame, d: int, rows: int, row_bytes: float
+) -> DataFrame:
     """Exact verify stage of the set-similarity operators
     (:func:`minhash_lsh_pairs`, operators/ssjoin.py): |A ∩ B| for every
     candidate pair, returned as (id_a, id_b, n_a, n_b, inter). The
@@ -612,32 +616,30 @@ def _verify(pairs: DataFrame, arrays: DataFrame, d: int) -> DataFrame:
     with ``h``, a distinct hash array, and ``n``, its size. Every
     column of ``arrays`` attaches to both sides with an _a/_b suffix,
     so pairs that already carry n_a/n_b (MinHash's length filter needs
-    them) pass an (id, h) table. ``d`` is the measured distinct-text
-    count; both decisions read it:
+    them) pass an (id, h) table. Two decisions, each made once:
 
-    - Attach joins: broadcast while d fits _BROADCAST_MAX_ROWS_ARRAY,
-      shuffle_hash above it (no sort of millions of array-carrying
-      rows, as a merge join would impose). The arrays descend from
-      checkpoints whose frozen estimates would static-broadcast them
-      at any scale, so the measurement decides (:func:`_sized`).
-    - Intersect: JVM ``array_intersect`` below
-      _VERIFY_KERNEL_MIN_DISTINCT, the Arrow kernel
-      :func:`_intersect_counts_np` from it on; both exact on distinct
-      arrays, with the same integer (coalesce matches the kernel's 0
-      for a null or empty side).
+    - Attach joins: ``arrays`` has ``rows`` measured rows of
+      ``row_bytes`` measured width, and :func:`_sized` picks broadcast
+      or shuffle_hash for both attaches.
+    - Intersect: JVM ``array_intersect`` while ``d``, the measured
+      distinct-text count, is below _VERIFY_KERNEL_MIN_DISTINCT, the
+      Arrow kernel :func:`_intersect_counts_np` from it on; both exact
+      on distinct arrays, with the same integer (coalesce matches the
+      kernel's 0 for a null or empty side).
 
-    The kernel sorts each left array once per run of equal id_a. Above
-    the budget the second attach re-exchanges the pair stream by id_b,
-    so a sort within partitions on id_a after the last attach restores
-    the runs. Under broadcast the attaches keep the candidate stage's
-    stream order and no sort runs: a sort of the narrow pairs before
-    the joins is dropped by Catalyst (EliminateSorts removes a sort
-    under a join), and one of the array-carrying rows after them is
-    not paid where candidate volume is largest."""
+    The kernel sorts each left array once per run of equal id_a. Under
+    shuffle_hash the second attach re-exchanges the pair stream by
+    id_b, so a sort within partitions on id_a after the last attach
+    restores the runs. Under broadcast the attaches keep the candidate
+    stage's stream order and no sort runs: a sort of the narrow pairs
+    before the joins is dropped by Catalyst (EliminateSorts removes a
+    sort under a join), and one of the array-carrying rows after them
+    is not paid where candidate volume is largest."""
+    attach = _sized(rows, row_bytes, big="shuffle_hash")
 
     def side(s: str) -> DataFrame:
         cols = [F.col(c).alias(f"{c}_{s}") for c in arrays.columns]
-        return _sized(arrays.select(*cols), d, _BROADCAST_MAX_ROWS_ARRAY, big="shuffle_hash")
+        return arrays.select(*cols).hint(attach)
 
     paired = (
         pairs.join(side("a"), "id_a")
@@ -647,7 +649,7 @@ def _verify(pairs: DataFrame, arrays: DataFrame, d: int) -> DataFrame:
     if d < _VERIFY_KERNEL_MIN_DISTINCT:
         inter = F.coalesce(F.size(F.array_intersect("h_a", "h_b")), F.lit(0))
         return paired.select("id_a", "id_b", "n_a", "n_b", inter.alias("inter"))
-    if d > _BROADCAST_MAX_ROWS_ARRAY:
+    if attach != "broadcast":
         paired = paired.sortWithinPartitions("id_a")
     return paired.mapInPandas(
         _intersect_counts_np,
@@ -733,17 +735,27 @@ def minhash_lsh_pairs(
     # accumulators the driver has already collected (hundreds of
     # "Failed to update accumulator" errors per five passes, and those
     # metrics lost). See operators/ssjoin.py for the
-    # persist-vs-localCheckpoint trade.
-    base = src.select(
-        "id", hashed_shingle_set("__t", k).alias("sh_hashes")
-    ).localCheckpoint(eager=True)
+    # persist-vs-localCheckpoint trade. The same job measures the
+    # table's rows and average array length for the join gates
+    # (:func:`_sized`): an observation rides on the checkpoint's own
+    # job, where a lazy checkpoint completed by an aggregate would
+    # run one job more.
+    obs = Observation()
+    base = (
+        src.select("id", hashed_shingle_set("__t", k).alias("sh_hashes"))
+        .observe(obs, F.count(F.lit(1)).alias("rows"), F.avg(F.size("sh_hashes")).alias("len"))
+        .localCheckpoint(eager=True)
+    )
+    rows, avg_len = obs.get["rows"], obs.get["len"] or 0.0
     # the kernel output feeds both the band table and the packed prune
     # (id + n + 64-long sig + 16-long packed ≈ 700 B per DISTINCT doc)
     sp = _signatures(base, num_hashes).localCheckpoint(eager=False)
     banded = _band_table(sp, bands, num_hashes // bands, extra=("n",))
     cands = _bucket_candidates(banded, jaccard_threshold, n_parts)
-    cands = _packed_prune(cands, sp, d, jaccard_threshold)
-    counted = _verify(cands, base.select("id", F.col("sh_hashes").alias("h")), d)
+    cands = _packed_prune(cands, sp, rows, jaccard_threshold)
+    # an id and an int array
+    arrays = base.select("id", F.col("sh_hashes").alias("h"))
+    counted = _verify(cands, arrays, d, rows, 8 + 4 * avg_len)
     # n_a/n_b are exact set sizes, so the union is set arithmetic
     # (|A ∪ B| = |A| + |B| − |A ∩ B|), never an array_union per pair
     inter = F.col("inter")
@@ -783,19 +795,17 @@ def _minhash_clusters(
     and every exact-dup cluster of size >= 2 whose text shingles
     (``shingled``, matching the pair form's exclusion of empty-shingle
     twins) becomes a self-row at jaccard 1.0. ``reps``/``members`` are
-    :func:`_collapse`'s. The member counts are d-row aggregates whose
-    frozen estimates would static-broadcast them at any scale, so every
-    join is gated on the measured count (:func:`_sized`); below the
-    metadata budget the broadcast skips two shuffles of the pair
-    table."""
+    :func:`_collapse`'s. Every join side is a d-row aggregate of
+    fixed-width columns, gated by :func:`_sized`; a broadcast skips two
+    shuffles of the pair table."""
     sizes = members.groupBy("__th").agg(F.count("*").alias("m"))
     rep_sz = reps.select(F.col("id").alias("rid"), "__th").join(
-        _sized(sizes, d, _BROADCAST_MAX_ROWS_META), "__th"
+        sizes.hint(_sized(d, 48)), "__th"
     )
 
     def side(s: str) -> DataFrame:
         cols = [F.col("rid").alias(f"id_{s}"), F.col("m").alias(f"members_{s}")]
-        return _sized(rep_sz.select(*cols), d, _BROADCAST_MAX_ROWS_META)
+        return rep_sz.select(*cols).hint(_sized(d, 16))
 
     cross = (
         rep_pairs.join(side("a"), "id_a")
@@ -814,9 +824,7 @@ def _minhash_clusters(
     m = F.col("m")
     intra = (
         rep_sz.join(
-            _sized(shingled, d, _BROADCAST_MAX_ROWS_META),
-            F.col("rid") == F.col("id"),
-            "left_semi",
+            shingled.hint(_sized(d, 8)), F.col("rid") == F.col("id"), "left_semi"
         )
         .filter(m >= 2)
         .select(
@@ -1311,19 +1319,23 @@ def ngram_jaccard_pairs(
         "id", grams.alias("grams")
     ).withColumn("n_grams", F.size("grams"))
     inv = base.select("id", "n_grams", F.explode("grams").alias("gram"))
-    # measured join gate (round-11 estimate-blind-broadcast audit):
-    # the inverted-index self-joins and the verify array attaches all
-    # descend from the words checkpoint, whose frozen estimate made
-    # the planner static-broadcast one full copy of the corpus-scaled
-    # gram table at 377 k docs. One cheap count over the checkpoint
-    # (materialized by the query anyway) keys the strategy: broadcast
-    # while it provably fits, sort-merge beyond.
-    n_docs = words_df.count()
+    # the join gates (:func:`_sized`) read one aggregate over the words
+    # checkpoint, which also completes it: documents, words (an upper
+    # bound on grams, as each doc has at most one gram per word) and
+    # word characters, from which a gram's average length follows
+    n_docs, n_words, n_chars = words_df.agg(
+        F.count(F.lit(1)), F.sum(F.size(ws)), F.sum(F.length(F.array_join(ws, "")))
+    ).first()
+    n_words = n_words or 0
+    # a gram string: n words of average length, n - 1 spaces
+    gram_bytes = 8 + n * (n_chars or 0) / max(n_words, 1) + n - 1
+    # id, n_grams and a gram
+    inv_hint = _sized(n_words, 8 + 4 + gram_bytes)
 
     if max_doc_frequency is None:
         # single-shuffle count path: shared-gram counts double as the
         # exact intersection size because every gram survives
-        inv = _sized(inv, n_docs, _SSJ_GRAM_BROADCAST_MAX_DOCS)
+        inv = inv.hint(inv_hint)
         l, r = inv.alias("l"), inv.alias("r")
         shared = (
             l.join(r, (F.col("l.gram") == F.col("r.gram")) & (F.col("l.id") < F.col("r.id")))
@@ -1353,11 +1365,7 @@ def ngram_jaccard_pairs(
         .filter(F.col("df") > max_doc_frequency)
         .select("gram")
     )
-    capped = _sized(
-        inv.join(F.broadcast(hot), "gram", "left_anti"),
-        n_docs,
-        _SSJ_GRAM_BROADCAST_MAX_DOCS,
-    )
+    capped = inv.join(F.broadcast(hot), "gram", "left_anti").hint(inv_hint)
     lc, rc = capped.alias("l"), capped.alias("r")
     cands = (
         lc.join(rc, (F.col("l.gram") == F.col("r.gram")) & (F.col("l.id") < F.col("r.id")))
@@ -1366,16 +1374,10 @@ def ngram_jaccard_pairs(
     )
     # exact verify on the (candidate-bounded) pair set: join the full
     # gram arrays back so values match the uncapped computation
-    ga = _sized(
-        base.select(F.col("id").alias("id_a"), F.col("grams").alias("g_a")),
-        n_docs,
-        _BROADCAST_MAX_ROWS_ARRAY,
-    )
-    gb = _sized(
-        base.select(F.col("id").alias("id_b"), F.col("grams").alias("g_b")),
-        n_docs,
-        _BROADCAST_MAX_ROWS_ARRAY,
-    )
+    # an id and a doc's grams
+    arr_hint = _sized(n_docs, 8 + n_words / max(n_docs, 1) * gram_bytes)
+    ga = base.select(F.col("id").alias("id_a"), F.col("grams").alias("g_a")).hint(arr_hint)
+    gb = base.select(F.col("id").alias("id_b"), F.col("grams").alias("g_b")).hint(arr_hint)
     verified = cands.join(ga, "id_a").join(gb, "id_b")
     shared_sz = F.size(F.array_intersect("g_a", "g_b")).cast("double")
     jaccard = shared_sz / (F.size("g_a") + F.size("g_b") - shared_sz)
@@ -1774,16 +1776,8 @@ def segment_dedup_clean(
         )
         .localCheckpoint(eager=False)
     )
-    # join-strategy gate from a MEASURED count (the _sized pattern):
-    # firsts and drop_lists are aggregates over checkpoint scans, so
-    # the static planner broadcasts them off frozen estimates at EVERY
-    # scale (round-11 plan audit: both joins were BroadcastHashJoin at
-    # sf10u, a ~200 MB build that happens to win there but is
-    # scale-blind). seg_meta is checkpointed — its count (total
-    # segments, an upper bound for both sides' rows at ~70 B/row) is
-    # one cheap job over work the query materializes anyway; 3 M rows
-    # ≈ 200 MB matches the measured-good sf10u broadcast, beyond that
-    # the joins degrade to sort-merge instead of a driver-side build.
+    # the total segment count bounds both gated sides' rows
+    # (:func:`_sized`) and completes the checkpoint
     seg_count = seg_meta.count()
     firsts = seg_meta.groupBy("__h").agg(
         F.count("*").alias("__cnt"),
@@ -1791,9 +1785,8 @@ def segment_dedup_clean(
     )
     # dropped = duplicated segment occurrences that are not the
     # canonical first: exactly the complement of the old kept filter
-    drops = seg_meta.join(
-        _sized(firsts, seg_count, _SEG_BROADCAST_MAX_ROWS), "__h"
-    ).filter(
+    # an md5, a count and an (id, position) struct
+    drops = seg_meta.join(firsts.hint(_sized(seg_count, 40 + 8 + 12)), "__h").filter(
         (F.col("__cnt") > 1)
         & ~(
             (F.col("__id") == F.col("__first.__id"))
@@ -1809,11 +1802,9 @@ def segment_dedup_clean(
     # rebuild concatenates segments exactly as the array_sort of the
     # old collect_list form did
     kept_idx = F.array_except(F.sequence(F.lit(1), n_seg), dropped)
-    return with_ws.join(
-        _sized(drop_lists, seg_count, _SEG_BROADCAST_MAX_ROWS),
-        "__id",
-        "left",
-    ).select(
+    # an id per doc and an int per dropped segment: at most 8 + 4
+    # bytes per segment
+    return with_ws.join(drop_lists.hint(_sized(seg_count, 8 + 4)), "__id", "left").select(
         F.col("__id").alias(id_col),
         F.array_join(
             F.transform(

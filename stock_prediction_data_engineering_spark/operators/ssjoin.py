@@ -25,19 +25,10 @@ LLM-curation surface (BASELINE.json).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .dedup import _collapse, _expand_members, _sized, _verify
-
-# d (distinct texts) above which the gram-df and prefix tables stop
-# being broadcast: vocabulary scales ~linearly with distinct text
-# (pseudo-unique corpora), so 50 k docs x ~45 grams/doc x ~50 B/row
-# ~ 100 MB is the last measured-sane build; beyond, sort-merge. The
-# round-11 plan audit found the static planner broadcasting the
-# 16 M-row gram-df table and one full prefix side at 377 k docs
-# (~GB-class builds that only survive in local mode).
-_SSJ_BROADCAST_MAX_D_VOCAB = 50_000
 
 
 def split_words(text: Column | str) -> Column:
@@ -151,14 +142,25 @@ def jaccard_similarity_join(
     # it honestly. Its blocks are unreplicated executor-local: an
     # executor loss fails the job (use persist(MEMORY_AND_DISK) under
     # preemptible executors). Eager because its plan holds an exchange
-    # (see the shingle table in operators/dedup.py minhash_lsh_pairs).
-    arrs = arrs.localCheckpoint(eager=True)
+    # (see the shingle table in operators/dedup.py minhash_lsh_pairs);
+    # its job also measures rows, grams and gram characters for the
+    # join gates (:func:`_sized`).
+    obs = Observation()
+    arrs = arrs.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.sum("n").alias("grams"),
+        F.sum(F.length(F.array_join("arr", ""))).alias("chars"),
+    ).localCheckpoint(eager=True)
+    rows, n_grams = obs.get["rows"], obs.get["grams"] or 0
+    gram_bytes = 8 + (obs.get["chars"] or 0) / max(n_grams, 1)
 
+    # the gram-keyed sides have at most one row per gram occurrence
     grams = arrs.select("id", "n", F.explode("arr").alias("gram"))
     dfreq = grams.groupBy("gram").agg(F.count("*").alias("df"))
 
     ranked = grams.join(
-        _sized(dfreq, prof_d, _SSJ_BROADCAST_MAX_D_VOCAB), "gram"
+        dfreq.hint(_sized(n_grams, gram_bytes + 8)), "gram"
     ).withColumn("rnk", F.row_number().over(Window.partitionBy("id").orderBy("df", "gram")))
     # prefix length = n - ceil(t*n) + 1, all integer:
     # ceil(a*n/b) = (a*n + b - 1) div b
@@ -178,10 +180,9 @@ def jaccard_similarity_join(
     # J >= t forces t*na <= nb <= na/t, and a pair seen at prefix
     # positions (pa, pb) can overlap at most 1 + min(na-pa, nb-pb)
     # grams, which must reach ceil(t/(1+t)*(na+nb)); both checks are
-    # integer cross-multiplied. The build side is gated like dfreq:
-    # the static planner broadcast one full prefix copy at 377 k docs
-    # off the checkpoint's frozen estimate.
-    pref = _sized(pref, prof_d, _SSJ_BROADCAST_MAX_D_VOCAB)
+    # integer cross-multiplied. The build side (id, gram, n, rnk) is
+    # gated like dfreq.
+    pref = pref.hint(_sized(n_grams, 8 + gram_bytes + 4 + 4))
     a = pref.alias("a")
     b = pref.alias("b")
     nsum = F.col("a.n") + F.col("b.n")
@@ -203,7 +204,9 @@ def jaccard_similarity_join(
     )
 
     # exact verify over the hashed gram sets (operators/dedup.py)
-    counted = _verify(cand, arrs.select("id", F.col("harr").alias("h"), "n"), prof_d)
+    # an id, a long array and its int size
+    arrays = arrs.select("id", F.col("harr").alias("h"), "n")
+    counted = _verify(cand, arrays, prof_d, rows, 8 + 8 * n_grams / max(rows, 1) + 4)
     union = F.col("n_a") + F.col("n_b") - F.col("inter")
     verified = counted.select(
         F.col("id_a").alias("doc_a"),

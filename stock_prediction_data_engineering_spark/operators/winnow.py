@@ -211,7 +211,6 @@ def winnow_pairs(
     w: int = 8,
     df_cap: int = 50,
     with_spans: bool = False,
-    df_count_mode: str = "window",
 ) -> DataFrame:
     """Pairs of DISTINCT texts sharing >= 1 winnowing fingerprint.
 
@@ -222,12 +221,6 @@ def winnow_pairs(
     shared_fp counts distinct shared fingerprints, and dup_a/dup_b
     are the exact-duplicate cluster sizes — total member-pair counts
     are derivable as dup_a * dup_b without quadratic output.
-
-    ``df_count_mode`` picks how the document-frequency cap is
-    computed: ``"window"`` (default, fastest on measured corpora) or
-    ``"preagg"`` (map-side-combined counts; safe when a single
-    boilerplate fingerprint can be corpus-hot — see the strategy
-    comment at the cap site). Answers are identical.
 
     ``with_spans=True`` adds ``max_span_len``: the length in chars of
     the longest shared verbatim run per pair (the Lee et al. ACL'22
@@ -282,54 +275,25 @@ def winnow_pairs(
     # No checkpoint: the posting block below consumes fps exactly
     # once, so the kernel streams straight into its one exchange.
     fps = winnow_fingerprints(m.repartition(par, "rep"), "rep", k, w)
-    # df cap + posting lists. Two count strategies, same answers
-    # (equivalence-pinned in tests/test_winnow.py):
-    #
-    # "window" (default, measured-typical): count + cap filter +
-    # collect_list in ONE exchange — a partition-unbounded window
-    # count over fp (same hash layout the groupBy needs), then a
-    # partition-local list agg. The earlier [count agg + sort-merge
-    # semi join + re-agg] form exchanged and sorted the fingerprint
-    # table three times for the same result (measured 46.7 s -> ~22 s
-    # at sf10u). SKEW BOUND: WindowExec buffers each fp group in an
+    # df cap + posting lists: count + cap filter + collect_list in ONE
+    # exchange — a partition-unbounded window count over fp (same hash
+    # layout the groupBy needs), then a partition-local list agg. The
+    # earlier [count agg + sort-merge semi join + re-agg] form
+    # exchanged and sorted the fingerprint table three times for the
+    # same result (measured 46.7 s -> ~22 s at sf10u). SKEW BOUND:
+    # WindowExec buffers each fp group in an
     # ExternalAppendOnlyUnsafeRowArray (spillable, never OOM), so a
     # corpus-hot boilerplate fp routes ALL its (rep, fp) rows through
     # one window task — O(hot-group) disk/straggler on that task,
     # though the cap still drops the group before any posting list is
     # built.
     #
-    # "preagg" (hot-fp-safe option): groupBy count FIRST — partial
-    # aggregation reduces a hot fp map-side before its count ever
-    # crosses the wire — then a merge-hinted semi join keeps only
-    # in-cap fps, then the list agg. Three exchanges of the
-    # fingerprint table (plus a checkpoint so the Arrow kernel runs
-    # once, not per consumer), so ~2x slower on a typical corpus, but
-    # the hot fp's raw rows are never window-buffered: they stream
-    # through the semi join's external sort and drop. Choose this when
-    # the corpus can contain fps shared by a material fraction of all
-    # documents (e.g. unstripped license/navigation boilerplate).
-    #
     # Nothing here is broadcast (see JOIN-STRATEGY NOTE).
-    if df_count_mode not in ("window", "preagg"):
-        raise ValueError(
-            f"df_count_mode must be 'window' or 'preagg', got {df_count_mode!r}"
-        )
-    if df_count_mode == "window":
-        whc = Window.partitionBy("fp")
-        capped = (
-            fps.withColumn("c", F.count("*").over(whc))
-            .filter((F.col("c") >= 2) & (F.col("c") <= df_cap))
-            .drop("c")
-        )
-    else:
-        fps = fps.localCheckpoint(eager=False)
-        keep = (
-            fps.groupBy("fp")
-            .agg(F.count("*").alias("c"))
-            .filter((F.col("c") >= 2) & (F.col("c") <= df_cap))
-            .select("fp")
-        )
-        capped = fps.join(keep.hint("merge"), "fp", "left_semi")
+    capped = (
+        fps.withColumn("c", F.count("*").over(Window.partitionBy("fp")))
+        .filter((F.col("c") >= 2) & (F.col("c") <= df_cap))
+        .drop("c")
+    )
     posting = capped.groupBy("fp").agg(
         F.sort_array(F.collect_list("rep")).alias("reps")
     )

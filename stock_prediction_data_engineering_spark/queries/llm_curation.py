@@ -297,14 +297,9 @@ def contamination_screen(docs: DataFrame) -> DataFrame:
     members = docs.select(
         "doc_id", F.md5(F.col("text").cast("string")).alias("__th")
     ).localCheckpoint(eager=False)
-    # measured join gate (round-11 estimate-blind-broadcast audit):
-    # the member/rep-side joins below descend from this checkpoint and
-    # the planner static-broadcast them at every measured scale off
-    # its frozen estimate (train_m is member-scaled — unbounded). One
-    # count over the checkpoint (materialized by the query anyway)
-    # keys broadcast-vs-merge; today's winning broadcasts are kept
-    # wherever the measured count proves they fit.
-    from ..operators.dedup import _BROADCAST_MAX_ROWS_META, _sized
+    # the member count bounds the rows of every gated side below, each
+    # an md5 with at most one long (operators/dedup.py _sized)
+    from ..operators.dedup import _sized
 
     n_members = members.count()
     reps = members.groupBy("__th").agg(F.min("doc_id").alias("rid"))
@@ -327,20 +322,12 @@ def contamination_screen(docs: DataFrame) -> DataFrame:
     # that side before the overlap join (a cluster wholly on one side
     # of the cut contributes nothing)
     t_grams = rep_grams.join(
-        _sized(
-            train_m.select("__th").distinct(),
-            n_members,
-            _BROADCAST_MAX_ROWS_META,
-        ),
+        train_m.select("__th").distinct().hint(_sized(n_members, 40)),
         "__th",
         "left_semi",
     )
     b_grams = rep_grams.join(
-        _sized(
-            bench_sizes.select("__th"), n_members, _BROADCAST_MAX_ROWS_META
-        ),
-        "__th",
-        "left_semi",
+        bench_sizes.select("__th").hint(_sized(n_members, 40)), "__th", "left_semi"
     )
     overlap = (
         t_grams.select(F.col("__th").alias("__th_t"), "g")
@@ -353,12 +340,8 @@ def contamination_screen(docs: DataFrame) -> DataFrame:
     # member — the sum, never the expansion
     per_cluster = (
         overlap.join(
-            _sized(
-                bench_sizes.select(
-                    F.col("__th").alias("__th_b"), "bench_members"
-                ),
-                n_members,
-                _BROADCAST_MAX_ROWS_META,
+            bench_sizes.select(F.col("__th").alias("__th_b"), "bench_members").hint(
+                _sized(n_members, 48)
             ),
             "__th_b",
         )
@@ -368,15 +351,11 @@ def contamination_screen(docs: DataFrame) -> DataFrame:
             F.max("n_shared").alias("max_shared"),
         )
         .join(
-            _sized(
-                n_g.select(F.col("__th").alias("__th_t"), "n_g"),
-                n_members,
-                _BROADCAST_MAX_ROWS_META,
-            ),
+            n_g.select(F.col("__th").alias("__th_t"), "n_g").hint(_sized(n_members, 48)),
             "__th_t",
         )
     )
-    return _sized(train_m, n_members, _BROADCAST_MAX_ROWS_META).join(
+    return train_m.hint(_sized(n_members, 48)).join(
         per_cluster, F.col("__th") == F.col("__th_t")
     ).select(
         F.col("doc_id").alias("train_doc_id"),

@@ -106,19 +106,19 @@ def test_minhash_verify_branches_bit_identical(spark, monkeypatch):
 
 
 def test_verify_above_broadcast_budget_keeps_id_a_runs(spark, monkeypatch):
-    """Above the array broadcast budget the verify stage attaches the
+    """Above the broadcast byte budget the verify stage attaches the
     arrays with shuffle_hash joins; the second one re-exchanges the
     pair stream by id_b, so the stage sorts on id_a after the last
-    attach to give the Arrow kernel its id_a runs. With both gates at 0
-    every operator takes that regime: its answers equal the default
-    (broadcast) regime's, and the executed plan has a Sort on id_a
-    between the last join and MapInPandas."""
+    attach to give the Arrow kernel its id_a runs. With the budget and
+    the kernel gate at 0 every operator takes that regime: its answers
+    equal the default (broadcast) regime's, and the executed plan has
+    a Sort on id_a between the last join and MapInPandas."""
     from stock_prediction_data_engineering_spark.operators import dedup
 
     docs, _ = _verify_fixture(spark)
     ops = {k: v for k, v in _verify_operators().items() if k != "minhash_clusters"}
     want = {name: sorted(tuple(r) for r in op(docs).collect()) for name, op in ops.items()}
-    monkeypatch.setattr(dedup, "_BROADCAST_MAX_ROWS_ARRAY", 0)
+    monkeypatch.setattr(dedup, "_BROADCAST_BUDGET_BYTES", 0)
     monkeypatch.setattr(dedup, "_VERIFY_KERNEL_MIN_DISTINCT", 0)
     for name, op in ops.items():
         df = op(docs)
@@ -130,6 +130,53 @@ def test_verify_above_broadcast_budget_keeps_id_a_runs(spark, monkeypatch):
         assert "ShuffledHashJoin" in below[join], (name, below[join])
         sorts = [line for line in below[:join] if "Sort [id_a" in line]
         assert sorts, (name, below[: join + 1])
+
+
+def test_verify_gate_reads_array_width_not_row_count(spark, monkeypatch):
+    """The verify attach gate (operators/dedup.py _sized) weighs rows
+    by their measured width: two corpora with the same row count, one
+    of ~8-word and one of ~80-word texts, fall on opposite sides of a
+    budget set between their array sizes. The short-text arrays
+    broadcast, the long-text ones attach through ShuffledHashJoin, and
+    the long corpus answers exactly as it does when broadcast. A gate
+    on the row count alone would treat the two corpora alike."""
+    import random
+
+    from stock_prediction_data_engineering_spark.operators import dedup
+
+    def corpus(n_words, seed):
+        # 10 distinct texts and a one-word variant of each: no exact
+        # duplicates, so no collapse, and every variant pair verifies
+        rng = random.Random(seed)
+        vocab = [f"{rng.choice('bcdfgklmnp')}{i}{rng.choice('aeiou')}" for i in range(300)]
+        rows = []
+        for i in range(10):
+            words = [rng.choice(vocab) for _ in range(n_words)]
+            rows.append((2 * i, " ".join(words)))
+            words[n_words // 2] = "variant"
+            rows.append((2 * i + 1, " ".join(words)))
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    def run(docs):
+        df = dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.5)
+        got = sorted(tuple(r) for r in df.collect())
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return got, plan.split("== Initial Plan ==")[0]
+
+    short, long_ = corpus(8, 1), corpus(80, 2)
+    want, plan = run(long_)
+    assert "ShuffledHashJoin" not in plan and len(want) >= 10
+    n_broadcast = plan.count("BroadcastHashJoin")
+    # 20 rows of ~40 shingles (~0.2 KB) per short text, ~400 (~1.6 KB)
+    # per long one
+    monkeypatch.setattr(dedup, "_BROADCAST_BUDGET_BYTES", 10_000)
+    got, plan = run(long_)
+    assert got == want
+    assert plan.count("ShuffledHashJoin") == 2
+    assert plan.count("BroadcastHashJoin") == n_broadcast - 2
+    _, plan = run(short)
+    assert "ShuffledHashJoin" not in plan
+    assert plan.count("BroadcastHashJoin") == n_broadcast
 
 
 def test_collapse_helpers_verdict_and_member_expansion(spark):

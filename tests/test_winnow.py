@@ -66,31 +66,6 @@ def test_boilerplate_cap_drops_corpus_wide_fingerprints(spark):
     assert len(capped) < len(uncapped)
 
 
-def test_df_count_modes_agree(spark):
-    """The window-count and map-side-preagg df-cap strategies must
-    produce identical pair sets (same caps applied, same posting
-    lists) on a corpus mixing exact dups, a boilerplate quote shared
-    by many texts (exercises the cap), and unrelated fillers —
-    with and without the span refinement."""
-    rows = [(i, _FILLER_A + _QUOTE + _FILLER_A) for i in (1, 2, 3)]
-    rows += [
-        (10, _FILLER_B + _QUOTE),
-        (11, _FILLER_C + _QUOTE),
-        (12, _QUOTE + _FILLER_B[::-1]),
-        (13, _FILLER_C[::-1] + _FILLER_A),
-    ]
-    docs = _docs(spark, rows)
-    for spans in (False, True):
-        got = {}
-        for mode in ("window", "preagg"):
-            out = winnow_pairs(
-                docs, df_cap=3, with_spans=spans, df_count_mode=mode
-            )
-            got[mode] = sorted(tuple(r) for r in out.collect())
-        assert got["window"] == got["preagg"], f"spans={spans}"
-        assert len(got["window"]) > 0
-
-
 def test_short_texts_never_enter(spark):
     # below the guarantee length (31) a doc has no full window
     out = winnow_pairs(

@@ -23,9 +23,11 @@ Checks per plan (rendered optimized plan text):
   Deliberate, measured broadcasts are exempted by detecting the
   explicit broadcast hint in the optimized logical plan: a query
   whose every suspicious BroadcastExchange is matched by an explicit
-  hint (e.g. operators/dedup.py _sized, which broadcasts only below
-  a measured row budget) passes; unhinted suspicious broadcasts
-  flag.
+  hint (e.g. operators/dedup.py _sized, which broadcasts only while
+  measured rows × measured row width fit one byte budget) passes;
+  unhinted suspicious broadcasts flag. The JSON summary records both
+  counts per query (``broadcasts``), so drift in either shows between
+  runs even where the rule passes.
 
 Single-partition windows are already pinned per-query in
 tests/test_plan_shapes.py; this tool focuses on line-level expression
@@ -184,6 +186,7 @@ def main() -> None:
     registry.load_all()
     spark = get_spark(app_name="plan-lint")
     results: dict[str, list[str]] = {}
+    broadcasts: dict[str, dict[str, int]] = {}
     errors: dict[str, str] = {}
     for name, fn in sorted(registry.QUERIES.items()):
         try:
@@ -202,6 +205,8 @@ def main() -> None:
             phys = qe.executedPlan().toString()
             s = suspicious_broadcasts(phys)
             h = plan.count("strategy=broadcast")
+            if s or h:
+                broadcasts[name] = {"suspicious": s, "hinted": h}
             if s > h:
                 finds.append(f"estimate-blind-broadcast:{s}>{h}")
             finds = [
@@ -219,6 +224,7 @@ def main() -> None:
         "n_queries": len(registry.QUERIES),
         "n_flagged": len(results),
         "flagged": results,
+        "broadcasts": broadcasts,
         "n_errors": len(errors),
         "errors": errors,
     }
